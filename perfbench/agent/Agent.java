@@ -10,7 +10,9 @@ import java.nio.file.Paths;
 import java.nio.file.StandardCopyOption;
 import java.security.ProtectionDomain;
 import java.util.HashMap;
+import java.util.HashSet;
 import java.util.Map;
+import java.util.Set;
 
 import javassist.ClassPool;
 import javassist.CtClass;
@@ -20,8 +22,8 @@ import javassist.LoaderClassPath;
 import javassist.bytecode.AccessFlag;
 
 /** Java agent for the traced run: wraps the public entry points of the
-  * server's layers with Trace.enter/exit, and writes what Trace and the
-  * two listeners collected as JSON.
+  * server's layers with Trace.enter/exit, and writes what Trace and
+  * ExecListener collected as JSON.
   *
   * Argument: the output path P. When the file P.mark<k> appears, the
   * agent writes a snapshot of all counters to P.snap<k>; at JVM exit it
@@ -73,13 +75,17 @@ public final class Agent {
       ClassPool pool = new ClassPool(true);
       if (loader != null) pool.appendClassPath(new LoaderClassPath(loader));
       CtClass cc = pool.makeClass(new ByteArrayInputStream(bytes));
+      Set<String> missing = new HashSet<>(methods.keySet());
       for (CtMethod m : cc.getDeclaredMethods()) {
         Integer id = methods.get(m.getName());
         int flags = m.getMethodInfo().getAccessFlags();
         if (id == null || m.isEmpty() || (flags & (AccessFlag.BRIDGE | AccessFlag.SYNTHETIC)) != 0)
           continue;
         wrap(cc, m, id);
+        missing.remove(m.getName());
       }
+      if (!missing.isEmpty())
+        synchronized (errors) { errors.append(cc.getName()).append(" has no ").append(missing).append("; "); }
       byte[] b = cc.toBytecode();
       cc.detach();
       return b;
@@ -98,8 +104,10 @@ public final class Agent {
     CtMethod impl = CtNewMethod.copy(m, name + "$pb", cc, null);
     cc.addMethod(impl);
     String enter = id == Trace.DISPATCH ? "perfbench.Trace.enterDispatch((int) $1.msgType());"
+        : id == Trace.PHASE ? "perfbench.Trace.enterPhase($1);"
         : "perfbench.Trace.enter(" + id + ");";
     String exit = id == Trace.DISPATCH ? "perfbench.Trace.exitDispatch((int) $1.msgType());"
+        : id == Trace.PHASE ? "perfbench.Trace.exitPhase();"
         : id == Trace.ENCODE ? "perfbench.Trace.exitEncode((Object) r);"
         : "perfbench.Trace.exit(" + id + ");";
     String call = name + "$pb($$);";
@@ -121,11 +129,25 @@ public final class Agent {
     while (true) {
       Path mark = Paths.get(out + ".mark" + k);
       if (Files.exists(mark)) {
+        drainListenerBus();
         write(Paths.get(out + ".snap" + k), dump(false));
         k++;
       } else {
         try { Thread.sleep(10); } catch (InterruptedException e) { return; }
       }
+    }
+  }
+
+  /** Delivers the Spark events still queued on the listener bus, so
+    * that a snapshot counts every job, stage and task that ended before
+    * it, and none that ends after it. */
+  private static void drainListenerBus() {
+    try {
+      scala.Option<org.apache.spark.SparkContext> sc =
+          org.apache.spark.SparkContext$.MODULE$.getActive();
+      if (sc.isDefined()) sc.get().listenerBus().waitUntilEmpty();
+    } catch (Exception e) {
+      synchronized (errors) { errors.append("listener bus not drained: ").append(e).append("; "); }
     }
   }
 
@@ -191,13 +213,13 @@ public final class Agent {
         .append(",\"spill_bytes\":").append(ExecListener.spillBytes.get())
         .append(",\"input_bytes\":").append(ExecListener.inputBytes.get())
         .append(",\"input_records\":").append(ExecListener.inputRecords.get())
-        .append("},\"phases_ms\":{");
+        .append("},\"phases_ns\":{");
     boolean first = true;
-    for (Map.Entry<String, java.util.concurrent.atomic.AtomicLong> e : QeListener.phaseMs.entrySet()) {
+    for (Map.Entry<String, java.util.concurrent.atomic.AtomicLong> e : Trace.phaseNs.entrySet()) {
       b.append(first ? "" : ",").append(DumpSql.quote(e.getKey())).append(':').append(e.getValue().get());
       first = false;
     }
-    b.append("},\"actions\":").append(QeListener.actions.get());
+    b.append('}');
     synchronized (errors) { b.append(",\"errors\":").append(DumpSql.quote(errors.toString())); }
     if (full) {
       b.append(",\"spans\":").append(longs(Trace.spans));

@@ -1,5 +1,6 @@
 package perfbench;
 
+import java.util.concurrent.ConcurrentHashMap;
 import java.util.concurrent.ConcurrentLinkedQueue;
 import java.util.concurrent.atomic.AtomicLong;
 import java.util.concurrent.atomic.AtomicLongArray;
@@ -44,6 +45,8 @@ public final class Trace {
   /** session-setup layers (1-3) counted only outside statements */
   static final AtomicLongArray setupNs = new AtomicLongArray(N);
   static final AtomicLong statements = new AtomicLong();
+  /** Catalyst phase name -> time of its outermost measurePhase calls */
+  static final ConcurrentHashMap<String, AtomicLong> phaseNs = new ConcurrentHashMap<>();
 
   /** {layer, pid, statement, start ns, end ns, self ns, parent layer} */
   static final ConcurrentLinkedQueue<long[]> spans = new ConcurrentLinkedQueue<>();
@@ -57,6 +60,8 @@ public final class Trace {
     long stmt = -1;
     long pid = -1;
     boolean extendedOpen;
+    String phase;
+    long lastDur;
   }
 
   private static final ThreadLocal<Frame> FRAME = ThreadLocal.withInitial(Frame::new);
@@ -97,6 +102,7 @@ public final class Trace {
     if (d >= 256) return false;
     long t0 = f.start[d];
     long dur = t1 - t0;
+    f.lastDur = dur;
     long self = dur - f.child[d];
     if (d > 0) f.child[d - 1] += dur;
     f.depthOf[id]--;
@@ -109,6 +115,20 @@ public final class Trace {
     if (!COUNT_ONLY[id])
       spans.add(new long[] {id, f.pid, f.stmt, t0, t1, self, d > 0 ? f.id[d - 1] : -1});
     return f.depthOf[id] == 0;
+  }
+
+  /** Entry of QueryPlanningTracker.measurePhase. A phase that runs
+    * inside another (a subquery's analysis during planning, say) counts
+    * toward the outer one, so the phases add up to wall time. */
+  public static void enterPhase(String phase) {
+    Frame f = FRAME.get();
+    if (f.depthOf[PHASE] == 0) f.phase = phase;
+    enter(PHASE);
+  }
+
+  public static void exitPhase() {
+    Frame f = FRAME.get();
+    if (exit(PHASE)) phaseNs.computeIfAbsent(f.phase, k -> new AtomicLong()).addAndGet(f.lastDur);
   }
 
   /** exit for the encoders: counts the rendered size (chars for text,

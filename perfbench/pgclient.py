@@ -225,21 +225,17 @@ class Conn:
         STDOUT, whose rows arrive as CopyData."""
         return self._run(_msg(b"Q", _cstr(sql)), keep_every)
 
-    def execute(self, sql, params=(), param_oids=(), binary_params=False,
-                result_format=0, max_rows=0, keep_every=1):
+    def execute(self, sql, params=(), result_format=0, max_rows=0, keep_every=1):
         """Extended protocol: Parse/Bind/Describe/Execute/Sync on the
-        unnamed statement and portal. ``params`` are already encoded
-        (bytes) or None, typed by ``param_oids`` (default: unspecified);
-        with ``max_rows`` the portal is fetched in pages, each page a
-        further Execute."""
-        pfmt = 1 if binary_params else 0
-        bind = (b"\0\0" + _I16.pack(1) + _I16.pack(pfmt) + _I16.pack(len(params)))
+        unnamed statement and portal. ``params`` are text-encoded bytes
+        or None, their types left to the server; with ``max_rows`` the
+        portal is fetched in pages, each page a further Execute."""
+        bind = (b"\0\0" + _I16.pack(1) + _I16.pack(0) + _I16.pack(len(params)))
         for p in params:
             bind += _I32.pack(-1) if p is None else _I32.pack(len(p)) + p
         bind += _I16.pack(1) + _I16.pack(result_format)
         execute = _msg(b"E", b"\0" + _I32.pack(max_rows))
-        oids = _I16.pack(len(param_oids)) + b"".join(_I32.pack(o) for o in param_oids)
-        payload = (_msg(b"P", b"\0" + _cstr(sql) + oids) +
+        payload = (_msg(b"P", b"\0" + _cstr(sql) + _I16.pack(0)) +
                    _msg(b"B", bind) + _msg(b"D", b"P\0") + execute)
         if not max_rows:
             return self._run(payload + _msg(b"S", b""), keep_every)

@@ -3,7 +3,7 @@
 driven over the PostgreSQL wire protocol, every answer checked against
 DuckDB on the same parquet files.
 
-    python3 perfbench/run.py --workload analytic|bulk_io|oltp_churn \\
+    python3 perfbench/run.py --workload analytic|bulk_io \\
         --seed N --seconds S --trace 0|1 [--full]
 
 Run it from the root of a checkout; the first run builds the program
@@ -36,7 +36,7 @@ import tracing
 import workloads
 
 SETUP_LAUNCHES = 2
-WORKLOADS = ("analytic", "bulk_io", "oltp_churn")
+WORKLOADS = ("analytic", "bulk_io")
 E2E = [("setup_s", "s"), ("throughput_qps", "1/s"), ("latency_gmean_ms", "ms"),
        ("first_row_ms_p50", "ms"), ("result_mb_s", "MB/s")]
 
@@ -114,26 +114,21 @@ def end_to_end(stats, wall_s, setups):
     }
 
 
-def report_extra(stats, conn_ready, rss_mb):
-    """Metrics printed but not in BENCHMARK.json: each applies to one
-    workload only (every BENCHMARK.json metric must be reported by every
-    workload), and the server's peak RSS (VmHWM) follows the JVM's heap
-    growth, which spread 17-68% from run to run."""
+def report_extra(stats, rss_mb):
+    """Metrics printed but not in BENCHMARK.json: the ingest rate applies
+    to bulk_io only (every BENCHMARK.json metric must be reported by
+    every workload), and the server's peak RSS (VmHWM) follows the JVM's
+    heap growth, which spread 17-68% from run to run."""
     ok = [s for s in stats if s.ok]
     out = {"server_rss_mb": rss_mb,
            "error_rate": (len(stats) - len(ok)) / max(len(stats), 1),
            "latency_p50_ms": statistics.median(s.latency_ms for s in ok),
            "latency_p90_ms": percentile([s.latency_ms for s in ok], 0.9),
            "statements": len(stats)}
-    writes = [s.latency_ms for s in ok if s.kind == "write"]
-    if writes:
-        out["write_p50_ms"] = statistics.median(writes)
     ingest = [s for s in ok if s.kind == "ingest"]
     if ingest:
         out["ingest_mb_s"] = sum(s.sent_bytes for s in ingest) / 1e6 / (
             sum(s.latency_ms for s in ingest) / 1000.0)
-    if conn_ready:
-        out["conn_ready_ms_p50"] = statistics.median(conn_ready)
     rows = [s for s in ok if s.rows]
     cpu = sum(s.client_cpu_ms for s in rows)
     busy = sum(s.latency_ms for s in rows)
@@ -171,16 +166,14 @@ def main():
         names = sorted(oracle_sql) if args.full else workloads.ANALYTIC
         expected = workloads.analytic_prepare(oracle_sql, con, names, server.WORK,
                                               server.tree_hash([server.SF001]))
-    elif args.workload == "bulk_io":
-        prep = workloads.bulk_io_prepare(con, args.seed)
     else:
-        prep = workloads.oltp_prepare(con, workloads.scalar_expected(con))
+        prep = workloads.bulk_io_prepare(con, args.seed)
 
     t_prep = time.monotonic()
     trace_path = os.path.join(run_dir, "trace.json") if args.trace else None
     launches = 1 if args.trace or args.full else SETUP_LAUNCHES
     setups, srv = [], None
-    conn_ready, probe_stats = [], []
+    probe_stats = []
     try:
         for i in range(launches):
             srv = server.Server(info, sf_dir, run_dir, trace_path)
@@ -191,8 +184,6 @@ def main():
         c = srv.connect(workloads.STATEMENT_TIMEOUT_S)
         master = oracle.wire_rows(c.query("SELECT current_setting('spark.master') AS m"))[0][0]
         c.close()
-        if args.workload == "oltp_churn":
-            workloads.oltp_setup(srv)
         snaps = []
 
         def before_window():
@@ -209,16 +200,11 @@ def main():
             else:
                 stats, wall = workloads.analytic(srv, args.seed, args.seconds, oracle_sql,
                                                  expected, names, before_window)
-        elif args.workload == "bulk_io":
-            stats, wall = workloads.bulk_io(srv, args.seed, args.seconds, con, prep, before_window)
         else:
-            stats, wall, conn_ready = workloads.oltp_churn(srv, args.seed, args.seconds, prep,
-                                                           before_window)
+            stats, wall = workloads.bulk_io(srv, args.seed, args.seconds, con, prep, before_window)
         t_window = time.monotonic() - wall
         if args.trace:
             snaps.append(tracing.mark(trace_path, 2))
-        if args.workload == "oltp_churn":
-            workloads.oltp_teardown(srv)
         rss_mb = srv.peak_rss_mb()
     finally:
         if srv is not None:
@@ -243,10 +229,12 @@ def main():
         log(f"known failing on this commit: {', '.join(known)}"
             f" ({'same set' if failed_names == known else 'DIFFERENT set'})")
 
+    trace_problems = []
     if args.trace:
         with open(trace_path) as f:
             full = json.load(f)
         metrics, extra = tracing.layer_metrics(snaps[0], snaps[1], full, all_stats, nproc())
+        trace_problems = extra["problems"]
         stamp["default_parallelism"] = extra["default_parallelism"]
         shutil.copyfile(trace_path, os.path.join(server.WORK, f"trace-{args.workload}.json"))
         log(f"trace: {extra['calls']} instrumented calls at {extra['ns_per_call']:.0f} ns each; "
@@ -255,13 +243,13 @@ def main():
             f"({100 * metrics['trace.overhead_ms'] / max(extra['client_latency_ms'], 1e-9):.2f}%)")
         log("trace self time (ms): " + ", ".join(
             f"{k} {v:.1f}" for k, v in extra["self_ms"].items()))
-        if extra["agent_errors"]:
-            log(f"trace agent errors: {extra['agent_errors']}")
+        for p in trace_problems:
+            log(f"TRACE BROKEN: {p}")
         units = dict(tracing.METRICS)
     else:
         metrics = end_to_end(stats, wall, setups)
         units = dict(E2E)
-        for k, v in report_extra(stats, conn_ready, rss_mb).items():
+        for k, v in report_extra(stats, rss_mb).items():
             log(f"report {k} = {v}")
         for name in sorted({s.name for s in stats}):
             lat = [s.latency_ms for s in stats if s.name == name and s.ok]
@@ -276,7 +264,7 @@ def main():
     for k, v in metrics.items():
         log(f"metric {k} = {v:.6g} {units[k]}")
     print(json.dumps({
-        "correct": not failures,
+        "correct": not failures and not trace_problems,
         "attempted": len(all_stats),
         "failed": len(failures),
         "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},

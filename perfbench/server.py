@@ -143,7 +143,7 @@ def free_port():
 
 class Server:
     """One ServerMain process. ``trace_path`` turns on the tracing agent
-    and the two listeners (the traced run only)."""
+    and its SparkListener (the traced run only)."""
 
     def __init__(self, build_info, sf_dir, run_dir, trace_path=None):
         self.port = free_port()
@@ -153,8 +153,7 @@ class Server:
         cmd = ["java"] + build_info["java_options"] + [NO_PERF_DATA, f"-Djava.io.tmpdir={tmp}"]
         if trace_path:
             cmd += [f"-javaagent:{build_info['agent_jar']}={trace_path}",
-                    "-Dspark.extraListeners=perfbench.ExecListener",
-                    "-Dspark.sql.queryExecutionListeners=perfbench.QeListener"]
+                    "-Dspark.extraListeners=perfbench.ExecListener"]
         cmd += ["-cp", build_info["classpath"], "graft.server.ServerMain",
                 str(self.port), sf_dir]
         self.xmx = next((o for o in build_info["java_options"] if o.startswith("-Xmx")), "")

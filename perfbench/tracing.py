@@ -54,13 +54,31 @@ def _union_ms(intervals):
     return total / 1e6
 
 
+PHASES = ("parsing", "analysis", "optimization", "planning")
+
+
+def hook_problems(s1, s2):
+    """Why the layer readings cannot be trusted, or an empty list: the
+    agent failed to instrument a class or found no target method, or a
+    wrapped layer or a Catalyst phase had no call in the window. The
+    layer probe and the workload call every one of them, so a layer at 0
+    means its hook is broken (a renamed or moved method), not that the
+    layer got faster."""
+    out = [f"agent: {s2['errors']}"] if s2["errors"] else []
+    out += [f"no call of {n} in the window" for n in s2["layers"]
+            if s2["layers"][n]["calls"] == s1["layers"][n]["calls"]]
+    out += [f"no time in catalyst phase {p}" for p in PHASES
+            if s2["phases_ns"].get(p, 0) == s1["phases_ns"].get(p, 0)]
+    return out
+
+
 def layer_metrics(s1, s2, full, stats, nproc):
     """Metric dict from two snapshots, the final dump and the client's
     Stats of the layer window (probe + workload)."""
     L1, L2 = s1["layers"], s2["layers"]
     d = lambda name, key="total_ns": L2[name][key] - L1[name][key]
     e = lambda key: s2["exec"][key] - s1["exec"][key]
-    ph = lambda p: s2["phases_ms"].get(p, 0) - s1["phases_ms"].get(p, 0)
+    ph = lambda p: (s2["phases_ns"].get(p, 0) - s1["phases_ns"].get(p, 0)) / 1e6
     lo, hi = s1["mono_ns"], s2["mono_ns"]
     window_ms = (hi - lo) / 1e6
 
@@ -94,8 +112,7 @@ def layer_metrics(s1, s2, full, stats, nproc):
         "server.catalog_ms": d("server.catalog") / 1e6,
         "plans.rewrite_ms": d("plans.rewrite") / 1e6,
         "engine.query_ms": d("engine.query") / 1e6,
-        "catalyst.parsing_ms": ph("parsing"), "catalyst.analysis_ms": ph("analysis"),
-        "catalyst.optimization_ms": ph("optimization"), "catalyst.planning_ms": ph("planning"),
+        **{f"catalyst.{p}_ms": ph(p) for p in PHASES},
         "exec.ms": e("job_ms"), "exec.jobs": e("jobs"), "exec.stages": e("stages"),
         "exec.tasks": tasks, "exec.task_run_ms": e("task_run_ms"),
         "exec.task_cpu_ms": e("task_cpu_ns") / 1e6, "exec.gc_ms": e("gc_ms"),
@@ -111,5 +128,5 @@ def layer_metrics(s1, s2, full, stats, nproc):
     self_ms = {n: d(n, "self_ns") / 1e6 for n in L2}
     extra = {"self_ms": self_ms, "calls": calls, "ns_per_call": s2["ns_per_call"],
              "client_latency_ms": latency_ms, "default_parallelism": s2["default_parallelism"],
-             "agent_errors": s2["errors"]}
+             "problems": hook_problems(s1, s2)}
     return m, extra
