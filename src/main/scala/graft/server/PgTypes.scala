@@ -126,8 +126,8 @@ object PgTypes {
   }
 
   /** pg binary temporal encodings are relative to 2000-01-01. */
-  private val PgEpochDays = 10957L // days 1970-01-01 → 2000-01-01
-  private val PgEpochMicros = 946684800000000L
+  private[server] val PgEpochDays = 10957L // days 1970-01-01 → 2000-01-01
+  private[server] val PgEpochMicros = 946684800000000L
 
   /** Render one value in Postgres binary format; None = SQL NULL.
     * int2/4/8 and float4/8 are big-endian fixed width, bool one byte,
@@ -166,7 +166,8 @@ object PgTypes {
         // ship as their UTC-interpreted wall time, like the text path
         val micros = v match {
           case ts: java.sql.Timestamp =>
-            ts.getTime / 1000 * 1000000 + ts.getNanos / 1000
+            // floor: getTime of 1969-12-31 23:59:59.5 is -500 ms
+            Math.floorDiv(ts.getTime, 1000L) * 1000000 + ts.getNanos / 1000
           case i: java.time.Instant =>
             i.getEpochSecond * 1000000L + i.getNano / 1000
           case ldt: java.time.LocalDateTime =>
@@ -180,6 +181,16 @@ object PgTypes {
           "request text (format 0) for this column")
     })
   }
+
+  /** Encode one chunk of text-format result rows (DataRow or COPY
+    * lines); the chunk's framed bytes. [[ResultEncoder]] enters its
+    * per-row loop here, once per chunk, so that perfbench's traced run,
+    * which wraps `render` and `renderBinary` by name, times encoding
+    * and counts the framed bytes. */
+  def render(enc: ResultEncoder): Option[Array[Byte]] = Some(enc.encodeBatch())
+
+  /** [[render]] for a chunk of DataRows with binary-format columns. */
+  def renderBinary(enc: ResultEncoder): Option[Array[Byte]] = Some(enc.encodeBatch())
 
   private def quoteArrayElem(s: String): String =
     if (s.isEmpty || s.exists(c => c == ',' || c == '{' || c == '}' ||

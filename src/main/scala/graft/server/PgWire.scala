@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** PostgreSQL wire-protocol framing + text-format serialization.
@@ -42,43 +42,91 @@ object PgWire {
     val Json = 114
   }
 
-  final class MessageWriter(out: DataOutputStream) {
-    private val buf = new java.io.ByteArrayOutputStream()
-    private val d = new DataOutputStream(buf)
+  /** Bytes buffered before the writer hands them to the socket. */
+  val ChunkBytes = 64 * 1024
 
-    def int8(v: Int): MessageWriter = { d.writeByte(v); this }
-    def int16(v: Int): MessageWriter = { d.writeShort(v); this }
-    def int32(v: Int): MessageWriter = { d.writeInt(v); this }
-    def bytes(v: Array[Byte]): MessageWriter = { d.write(v); this }
-    def cstr(v: String): MessageWriter = {
-      d.write(v.getBytes(UTF_8)); d.writeByte(0); this
-    }
-    /** length-prefixed field value (-1 for NULL). */
-    def field(v: Option[String]): MessageWriter = v match {
-      case None => int32(-1)
-      case Some(s) =>
-        val b = s.getBytes(UTF_8); int32(b.length); bytes(b)
-    }
-    /** length-prefixed binary (format-1) field value (-1 for NULL). */
-    def fieldBytes(v: Option[Array[Byte]]): MessageWriter = v match {
-      case None => int32(-1)
-      case Some(b) => int32(b.length); bytes(b)
+  /** Builds backend messages in one reusable per-connection buffer.
+    * A message opens at its first payload write; `send` writes its type
+    * byte and back-patches its length. Whole messages go to `out` once
+    * about [[ChunkBytes]] have accumulated, and on `flushOut`.
+    * [[ResultEncoder]] frames result rows straight into the same buffer
+    * through `open`/`close`.
+    */
+  final class MessageWriter(out: OutputStream) {
+    private[server] var buf = new Array[Byte](ChunkBytes + 8192)
+    private[server] var pos = 0
+    /** start of the open message, -1 when none is open */
+    private var msgStart = -1
+
+    /** make room for `n` more bytes at `pos`. */
+    private[server] def ensure(n: Int): Unit =
+      if (pos + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, pos + n))
+
+    private[server] def putInt(at: Int, v: Int): Unit = {
+      buf(at) = (v >>> 24).toByte; buf(at + 1) = (v >>> 16).toByte
+      buf(at + 2) = (v >>> 8).toByte; buf(at + 3) = v.toByte
     }
 
-    /** discard any partially-built payload (error recovery: an
-      * exception mid-row must not corrupt the next message frame). */
-    def resetPayload(): Unit = { d.flush(); buf.reset() }
+    /** open a message (if none is open): reserve its type and length. */
+    private[server] def open(): Unit =
+      if (msgStart < 0) { ensure(5); msgStart = pos; pos += 5 }
 
-    /** emit one framed message and reset. */
+    /** finish the open message (opening an empty one if needed). */
+    private[server] def close(msgType: Char): Unit = {
+      open()
+      buf(msgStart) = msgType.toByte
+      putInt(msgStart + 1, pos - msgStart - 1)
+      msgStart = -1
+    }
+
+    def int8(v: Int): MessageWriter = {
+      open(); ensure(1); buf(pos) = v.toByte; pos += 1; this
+    }
+    def int16(v: Int): MessageWriter = {
+      open(); ensure(2); buf(pos) = (v >>> 8).toByte; buf(pos + 1) = v.toByte
+      pos += 2; this
+    }
+    def int32(v: Int): MessageWriter = {
+      open(); ensure(4); putInt(pos, v); pos += 4; this
+    }
+    def bytes(v: Array[Byte]): MessageWriter = {
+      open(); ensure(v.length)
+      System.arraycopy(v, 0, buf, pos, v.length); pos += v.length; this
+    }
+    def cstr(v: String): MessageWriter = { bytes(v.getBytes(UTF_8)); int8(0) }
+
+    /** discard the open message (error recovery: an exception mid-row
+      * must not leave a partial frame ahead of the ErrorResponse). */
+    def resetPayload(): Unit =
+      if (msgStart >= 0) { pos = msgStart; msgStart = -1 }
+
+    /** finish the open message; hand full chunks to the socket. */
     def send(msgType: Char): Unit = {
-      d.flush()
-      val payload = buf.toByteArray
-      out.writeByte(msgType)
-      out.writeInt(payload.length + 4)
-      out.write(payload)
-      buf.reset()
+      close(msgType)
+      if (pos >= ChunkBytes) drain()
     }
-    def flushOut(): Unit = out.flush()
+
+    /** the whole messages written since `mark`, taken out of the
+      * buffer as one array. */
+    private[server] def takeFrom(mark: Int): Array[Byte] = {
+      val chunk = java.util.Arrays.copyOfRange(buf, mark, pos)
+      pos = mark
+      chunk
+    }
+
+    /** send what is buffered, then `chunk`. */
+    private[server] def writeChunk(chunk: Array[Byte]): Unit = {
+      drain(); out.write(chunk)
+    }
+
+    /** callers drain between messages, never with one open */
+    private def drain(): Unit = {
+      if (pos > 0) out.write(buf, 0, pos)
+      pos = 0
+    }
+
+    def flushOut(): Unit = { drain(); out.flush() }
   }
 
   final case class FrontendMessage(msgType: Char, payload: Array[Byte]) {

@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, DataInputStream, OutputStream}
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -77,7 +77,8 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
   private def handleConnection(sock: Socket): Unit = {
     sock.setTcpNoDelay(true)
     val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+    // MessageWriter buffers whole messages itself: no stream buffer
+    val out = sock.getOutputStream
     val w = new MessageWriter(out)
     val pid = pidCounter.getAndIncrement()
     val secret = secretRng.nextInt()
@@ -119,7 +120,7 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     * A CancelRequest connection instead carries (pid, secret): cancel
     * the matching connection's Spark job group and close.
     */
-  private def startup(in: DataInputStream, out: DataOutputStream,
+  private def startup(in: DataInputStream, out: OutputStream,
       w: MessageWriter, pid: Int, secret: Int): Boolean = {
     var len = in.readInt()
     var code = in.readInt()
@@ -174,9 +175,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
   private var portalFmts = Map.empty[String, Array[Int]]
   /** open row streams for partially-executed portals (Execute with a
     * row limit → PortalSuspended, resumed by the next Execute). */
-  private var portalIters =
-    Map.empty[String, (java.util.Iterator[org.apache.spark.sql.Row],
-      Array[org.apache.spark.sql.types.StructField])]
+  private var portalIters = Map.empty[String, ResultEncoder]
 
   /** Active COPY FROM STDIN state: target table, format, accumulated
     * CopyData bytes. Non-None between CopyInResponse and CopyDone. */
@@ -345,7 +344,11 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
         executeLimited(portal, sql,
           if (maxRows > 0) maxRows else Int.MaxValue)
       else runStatement(sql, describeFirst = false)
-    } catch { case NonFatal(e) => errorResponse(e); skipTilSync = true }
+    } catch {
+      case NonFatal(e) =>
+        portalIters -= portal // a failed portal cannot resume
+        errorResponse(e); skipTilSync = true
+    }
   }
 
   /** resolve a Bind result-format code for column `i`: zero codes =
@@ -359,39 +362,27 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     * portal ('s') if rows remain — how pgjdbc fetchSize pages results.
     */
   private def executeLimited(portal: String, sql: String, maxRows: Int): Unit = {
-    val (it, schema) = portalIters.getOrElse(portal, {
+    val enc = portalIters.getOrElse(portal, {
       val df = Engine.query(session, sql)
-      (df.toLocalIterator(), df.schema.fields)
-    })
-    val fmts = portalFmts.getOrElse(portal, Array.emptyIntArray)
-    // validate binary columns BEFORE streaming: a mid-stream error
-    // would leave a half-emitted row set on the wire
-    var v = 0
-    while (v < schema.length) {
-      if (fmtAt(fmts, v) == 1 && !PgTypes.binarySupported(schema(v).dataType))
-        throw new UnsupportedOperationException(
-          s"binary result format is not supported for column " +
-            s"'${schema(v).name}' of type ${schema(v).dataType.sql}; " +
-            "request text (format 0)")
-      v += 1
-    }
-    var n = 0
-    while (n < maxRows && it.hasNext) {
-      val row = it.next()
-      w.int16(schema.length)
-      var i = 0
-      while (i < schema.length) {
-        if (fmtAt(fmts, i) == 1)
-          w.fieldBytes(PgTypes.renderBinary(row.get(i), schema(i).dataType))
-        else
-          w.field(PgTypes.render(row.get(i), schema(i).dataType))
-        i += 1
+      val schema = df.schema.fields
+      val fmts = portalFmts.getOrElse(portal, Array.emptyIntArray)
+      // validate binary columns BEFORE streaming: a mid-stream error
+      // would leave a half-emitted row set on the wire
+      var v = 0
+      while (v < schema.length) {
+        if (fmtAt(fmts, v) == 1 && !PgTypes.binarySupported(schema(v).dataType))
+          throw new UnsupportedOperationException(
+            s"binary result format is not supported for column " +
+              s"'${schema(v).name}' of type ${schema(v).dataType.sql}; " +
+              "request text (format 0)")
+        v += 1
       }
-      w.send('D')
-      n += 1
-    }
-    if (it.hasNext) {
-      portalIters += portal -> (it, schema)
+      ResultEncoder(w, df,
+        ResultEncoder.DataRows(Array.tabulate(schema.length)(fmtAt(fmts, _) == 1)))
+    })
+    val n = enc.stream(maxRows)
+    if (enc.hasNext) {
+      portalIters += portal -> enc
       w.send('s') // PortalSuspended
     } else {
       portalIters -= portal
@@ -601,7 +592,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     case copyToStdoutRe(src, optsRaw) =>
       // psql `\copy t to file` path: CopyOutResponse, one CopyData per
       // row (pg text format or CSV), CopyDone. Streams through
-      // toLocalIterator — one partition in memory at a time; STDOUT
+      // ResultEncoder — one partition in memory at a time; STDOUT
       // egress is single-socket by nature (scale exports use TO 'path').
       val df =
         if (src.startsWith("("))
@@ -615,28 +606,9 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       w.int8(0).int16(fields.length)
       fields.foreach(_ => w.int16(0))
       w.send('H') // CopyOutResponse
-      def csvQuote(s: String): String =
-        if (s.contains(delim) || s.contains("\"") || s.contains("\n"))
-          "\"" + s.replace("\"", "\"\"") + "\""
-        else s
-      var n = 0L
-      if (csv && header) {
-        w.bytes((fields.map(f => csvQuote(f.name)).mkString(delim) + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)).send('d')
-      }
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        val line = fields.indices.map { i =>
-          PgTypes.render(row.get(i), fields(i).dataType) match {
-            case None => if (csv) "" else "\\N"
-            case Some(s) => if (csv) csvQuote(s) else s
-          }
-        }.mkString(delim)
-        w.bytes((line + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)).send('d')
-        n += 1
-      }
+      val enc = ResultEncoder(w, df, ResultEncoder.Copy(csv, delim))
+      if (csv && header) enc.csvHeader()
+      val n = enc.stream(Long.MaxValue)
       w.send('c') // CopyDone
       Some(n)
     case copyToRe(src, path, optsOrNull) =>
@@ -696,7 +668,10 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       val ds = session.createDataset(lines)
       val reader = session.read.schema(schema).option("sep", st.delim)
       val df =
-        if (st.csv) reader.option("header", st.header.toString).csv(ds)
+        // pg CSV: an unquoted empty field is NULL, a quoted "" is ''
+        // (Spark reads both as its nullValue; NUL cannot occur in text)
+        if (st.csv) reader.option("header", st.header.toString)
+          .option("nullValue", "\u0000").csv(ds)
         else reader // pg text format: no quoting, backslash escapes, \N null
           .option("quote", "\u0000").option("nullValue", "\\N").csv(ds)
       w.cstr(s"COPY ${loadInto(st.table, df)}").send('C')
@@ -787,26 +762,11 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     w.send('T')
   }
 
-  /** Stream result rows without materializing on the driver
-    * (toLocalIterator — SURVEY §1.1's row-wise wire emission).
-    */
-  private def streamRows(df: DataFrame): Long = {
-    val schema = df.schema.fields
-    val it = df.toLocalIterator()
-    var n = 0L
-    while (it.hasNext) {
-      val row = it.next()
-      w.int16(schema.length)
-      var i = 0
-      while (i < schema.length) {
-        w.field(PgTypes.render(row.get(i), schema(i).dataType))
-        i += 1
-      }
-      w.send('D')
-      n += 1
-    }
-    n
-  }
+  /** Stream result rows as text DataRows without materializing them
+    * on the driver (SURVEY §1.1's row-wise wire emission). */
+  private def streamRows(df: DataFrame): Long =
+    ResultEncoder(w, df, ResultEncoder.DataRows(new Array(df.schema.length)))
+      .stream(Long.MaxValue)
 
   private def errorResponse(e: Throwable): Unit = {
     w.resetPayload() // drop any half-written DataRow payload

@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, FloatType, LongType, StringType}
 
 /** Bridge into `private[sql]` Spark internals needed by graft's native
   * Catalyst expressions (Column↔Expression conversion, the
-  * AbstractDataType input-type contract). Lives under the
-  * org.apache.spark.sql namespace for access; contains no logic.
+  * AbstractDataType input-type contract) and by the wire server's
+  * result encoder. Lives under the
+  * org.apache.spark.sql namespace for access; contains no graft logic.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -29,4 +32,13 @@ object ColumnBridge {
   val longBinaryInput: Seq[AbstractDataType] = Seq(LongType, LongType)
   val doubleQuadInput: Seq[AbstractDataType] =
     Seq(DoubleType, DoubleType, DoubleType, DoubleType)
+
+  /** What `Dataset.toLocalIterator` runs, minus its `Row` deserializer. */
+  def toLocalInternalIterator(qe: QueryExecution): Iterator[InternalRow] =
+    SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+      QueryExecution.withInternalError("""The "toLocalIterator" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        qe.executedPlan.executeToIterator()
+      }
+    }
 }
