@@ -37,12 +37,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Engine.cpusFromEnv(
+      math.min(32, Runtime.getRuntime.availableProcessors()))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions) // TVFs + parser + functions
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.timeType.enabled", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -16,6 +16,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
+  /** Local cores from `$SPARK_GRAFT_CPUS`, or `default` when unset;
+    * fails fast on anything but a positive integer, which would
+    * otherwise become a bad master URL or malformed bench JSON. */
+  def cpusFromEnv(default: => Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS") match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
   /** Build (or reuse) the shared session. Idempotent. */
   def session(master: String = "local[32]"): SparkSession = {
     val spark = SparkSession

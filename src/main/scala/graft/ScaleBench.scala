@@ -26,7 +26,7 @@ object ScaleBench {
     // honor SPARK_GRAFT_CPUS like Bench does (r13): the core-scaling
     // probe runs the heavy queries at 8 vs 32 cores on sf10+, where
     // (unlike sf0.1) the work is large enough for core count to show
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.cpusFromEnv(32)
     val spark = Engine.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
 

@@ -17,11 +17,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional dev-loop filter: run named queries only
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.cpusFromEnv(4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions) // TVFs + parser + functions
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.timeType.enabled", "true")
       .config("spark.ui.enabled", "false")

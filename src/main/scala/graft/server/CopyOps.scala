@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (delegated verbatim by the reference at cpp:52) mapped onto
   * DataFrame writers/readers, shared by the wire handler AND
   * `Engine.query` so library users get the same statements. STDIN
-  * copy stays wire-only (the bytes arrive on the socket).
+  * copy stays wire-only (the bytes arrive on the socket, [[CopyIn]])
+  * and appends through the same [[append]] step.
   *
   * COPY TO options: FORMAT PARQUET|CSV|JSON, HEADER, DELIMITER 'c',
   * PARTITION_BY (cols...) → hive-partitioned output directories (the
@@ -24,6 +25,17 @@ object CopyOps {
   def copyDelim(optsRaw: String): Option[String] =
     Option(optsRaw).flatMap(o =>
       """(?i)DELIM\w*\s+'([^']*)'""".r.findFirstMatchIn(o).map(_.group(1)))
+
+  /** The delimiter of a wire COPY (STDIN/STDOUT): pg takes exactly one
+    * single-byte character other than CR and LF; tab for text format
+    * and comma for CSV by default. */
+  def wireDelim(optsRaw: String, csv: Boolean): Char =
+    copyDelim(optsRaw) match {
+      case None => if (csv) ',' else '\t'
+      case Some(d) if d.length == 1 && d(0) < 0x80 && d(0) != '\n' && d(0) != '\r' => d(0)
+      case Some(d) => throw new UnsupportedOperationException(
+        s"COPY delimiter must be a single one-byte character other than CR and LF, got '$d'")
+    }
 
   def copyTo(session: SparkSession, src: String, path: String,
       optsOrNull: String): Long = {
@@ -99,20 +111,27 @@ object CopyOps {
     loadInto(session, table, df)
   }
 
+  /** Materialize `df` once, count it, and [[append]] it. */
   def loadInto(session: SparkSession, table: String, df: DataFrame): Long = {
-    // generated columns recompute from the file's values; NOT NULL /
-    // CHECK enforce before anything lands (one aggregate pass)
-    val snap = graft.TableConstraints.completeForWrite(session, table, df)
-      .localCheckpoint() // count + write from one materialization
-    graft.TableConstraints.enforce(table, snap)
+    val snap = df.localCheckpoint() // count + write from one materialization
     val n = snap.count()
+    append(session, table, snap)
+    n
+  }
+
+  /** Append a batch to `table` as INSERT does: generated columns
+    * recompute and NOT NULL / CHECK enforce before anything lands (one
+    * aggregate pass), then the key probes and the write run under the
+    * table's writer lock. */
+  def append(session: SparkSession, table: String, df: DataFrame): Unit = {
+    val rows = graft.TableConstraints.completeForWrite(session, table, df)
+    graft.TableConstraints.enforce(table, rows)
     Dml.lockFor(table).synchronized {
       // key/FK probes read the CURRENT table contents, so they must
       // sit inside the same lock as the append (DuckDB's COPY rejects
       // duplicate PK/UNIQUE and orphan FK rows exactly like INSERT)
-      graft.TableConstraints.enforceKeysAppend(session, table, snap)
-      snap.write.mode("append").insertInto(table)
+      graft.TableConstraints.enforceKeysAppend(session, table, rows)
+      rows.write.mode("append").insertInto(table)
     }
-    n
   }
 }

@@ -177,10 +177,8 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     * row limit → PortalSuspended, resumed by the next Execute). */
   private var portalIters = Map.empty[String, ResultEncoder]
 
-  /** Active COPY FROM STDIN state: target table, format, accumulated
-    * CopyData bytes. Non-None between CopyInResponse and CopyDone. */
-  private final case class CopyIn(table: String, csv: Boolean,
-      header: Boolean, delim: String, buf: java.io.ByteArrayOutputStream)
+  /** Active COPY FROM STDIN: non-None between CopyInResponse and
+    * CopyDone/CopyFail. */
   private var copyIn: Option[CopyIn] = None
 
   /** After an extended-protocol error, discard messages until Sync —
@@ -193,7 +191,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     // COPY FROM STDIN sub-protocol (psql \copy): accumulate CopyData
     // until CopyDone/CopyFail; everything else is out-of-band.
     case 'd' if copyIn.isDefined =>
-      copyIn.get.buf.write(msg.payload); true
+      copyIn.get.add(msg.payload); true
     case 'c' if copyIn.isDefined => copyInDone(); true
     case 'f' if copyIn.isDefined =>
       copyInFailed(msg.reader.cstr()); true
@@ -572,21 +570,10 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     * completed statement, None after switching into copy-in mode
     * (CopyInResponse sent; rows arrive as CopyData messages).
     */
-  private val copyToRe =
-    """(?is)^COPY\s+(\(.*\)|[\w.]+)\s+TO\s+'([^']+)'\s*(?:\((.*)\))?\s*;?\s*$""".r
-  private val copyFromFileRe =
-    """(?is)^COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(?:WITH\s*)?(.*?)\s*;?\s*$""".r
   private val copyFromStdinRe =
     """(?is)^COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(?:WITH\s*)?(.*?)\s*;?\s*$""".r
   private val copyToStdoutRe =
     """(?is)^COPY\s+(\(.*\)|[\w.]+)\s+TO\s+STDOUT\s*(?:WITH\s*)?(.*?)\s*;?\s*$""".r
-
-  /** DELIMITER 'c' parsed from the RAW options text — matching on the
-    * uppercased copy would corrupt lowercase delimiter characters.
-    */
-  private def copyDelim(optsRaw: String): Option[String] =
-    """(?i)DELIMITER\s+'(.)'""".r.findFirstMatchIn(
-      Option(optsRaw).getOrElse("")).map(_.group(1))
 
   private def copyStatement(sql: String): Option[Long] = sql.trim match {
     case copyToStdoutRe(src, optsRaw) =>
@@ -601,32 +588,29 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       val opts = Option(optsRaw).getOrElse("").toUpperCase
       val csv = opts.contains("CSV")
       val header = opts.contains("HEADER")
-      val delim = copyDelim(optsRaw).getOrElse(if (csv) "," else "\t")
+      val delim = CopyOps.wireDelim(optsRaw, csv)
       val fields = df.schema.fields
       w.int8(0).int16(fields.length)
       fields.foreach(_ => w.int16(0))
       w.send('H') // CopyOutResponse
-      val enc = ResultEncoder(w, df, ResultEncoder.Copy(csv, delim))
+      val enc = ResultEncoder(w, df, ResultEncoder.Copy(csv, delim.toString))
       if (csv && header) enc.csvHeader()
       val n = enc.stream(Long.MaxValue)
       w.send('c') // CopyDone
       Some(n)
-    case copyToRe(src, path, optsOrNull) =>
+    case CopyOps.copyToRe(src, path, optsOrNull) =>
       Some(CopyOps.copyTo(session, src, path, optsOrNull))
-    case copyFromFileRe(table, path, optsRaw) =>
+    case CopyOps.copyFromFileRe(table, path, optsRaw) =>
       Some(CopyOps.copyFromFile(session, table, path, optsRaw))
     case copyFromStdinRe(table, optsRaw) =>
       val opts = Option(optsRaw).getOrElse("").toUpperCase
-      val schema = session.table(table).schema // validates table exists
-      copyIn = Some(CopyIn(table,
-        csv = opts.contains("CSV"),
-        header = opts.contains("HEADER"),
-        delim = copyDelim(optsRaw)
-          .getOrElse(if (opts.contains("CSV")) "," else "\t"),
-        buf = new java.io.ByteArrayOutputStream()))
+      val csv = opts.contains("CSV")
+      val in = new CopyIn(session, table, csv, header = opts.contains("HEADER"),
+        delim = CopyOps.wireDelim(optsRaw, csv).toByte)
+      copyIn = Some(in)
       // CopyInResponse: overall text format, per-column text format
-      w.int8(0).int16(schema.length)
-      schema.foreach(_ => w.int16(0))
+      w.int8(0).int16(in.columns.length)
+      in.columns.foreach(_ => w.int16(0))
       w.send('G')
       w.flushOut()
       None
@@ -635,47 +619,17 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
         "COPY syntax: COPY (query)|table TO 'path' (FORMAT PARQUET|CSV|JSON [, HEADER]) | COPY table FROM 'path' (...) | COPY table FROM STDIN [(FORMAT csv [, HEADER])]")
   }
 
-  /** Append `df` to catalog table `table`; returns the row count.
-    * Generated columns recompute and NOT NULL / CHECK enforce first,
-    * same as the file-path COPY. */
-  private def loadInto(table: String, df: DataFrame): Long = {
-    val snap = graft.TableConstraints.completeForWrite(session, table, df)
-      .localCheckpoint() // count + write from one materialization
-    graft.TableConstraints.enforce(table, snap)
-    val n = snap.count()
-    snap.write.mode("append").insertInto(table)
-    n
-  }
-
-  /** CopyDone: parse the buffered copy-in payload (pg text format:
-    * tab-delimited `\N` nulls; or CSV) against the target table's
-    * schema via Spark's CSV reader over an in-memory Dataset, append,
-    * and complete the COPY. Scale note: STDIN ingest is inherently
-    * driver-bounded (the bytes arrive on one socket) — bulk loads at
-    * scale go through `COPY t FROM 'path'`, which is a distributed
-    * file scan.
+  /** CopyDone: parse, type and append the buffered copy-in payload
+    * ([[CopyIn]]), and complete the COPY. Scale note: STDIN ingest is
+    * inherently driver-bounded (the bytes arrive on one socket) — bulk
+    * loads at scale go through `COPY t FROM 'path'`, which is a
+    * distributed file scan.
     */
   def copyInDone(): Unit = {
-    val st = copyIn.get
+    val in = copyIn.get
     copyIn = None
-    try {
-      val text = new String(st.buf.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-      val lines = text.split("\r?\n", -1).toIndexedSeq
-        .filter(l => l.nonEmpty && l != "\\.")
-      val schema = session.table(st.table).schema
-      import session.implicits._
-      val ds = session.createDataset(lines)
-      val reader = session.read.schema(schema).option("sep", st.delim)
-      val df =
-        // pg CSV: an unquoted empty field is NULL, a quoted "" is ''
-        // (Spark reads both as its nullValue; NUL cannot occur in text)
-        if (st.csv) reader.option("header", st.header.toString)
-          .option("nullValue", "\u0000").csv(ds)
-        else reader // pg text format: no quoting, backslash escapes, \N null
-          .option("quote", "\u0000").option("nullValue", "\\N").csv(ds)
-      w.cstr(s"COPY ${loadInto(st.table, df)}").send('C')
-    } catch { case NonFatal(e) => errorResponse(e) }
+    try w.cstr(s"COPY ${in.load()}").send('C')
+    catch { case NonFatal(e) => errorResponse(e) }
     readyForQuery()
   }
 
@@ -771,6 +725,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
   private def errorResponse(e: Throwable): Unit = {
     w.resetPayload() // drop any half-written DataRow payload
     val sqlState = e match {
+      case c: CopyIn.Failure => c.sqlState
       case p: org.apache.spark.sql.catalyst.parser.ParseException => "42601"
       case a: org.apache.spark.sql.AnalysisException =>
         if (a.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND")) "42P01"
@@ -789,7 +744,11 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       .int8('V').cstr("ERROR")
       .int8('C').cstr(sqlState)
       .int8('M').cstr(msg.take(4000))
-      .int8(0)
+    e match {
+      case c: CopyIn.Failure => w.int8('W').cstr(c.context)
+      case _ =>
+    }
+    w.int8(0)
     w.send('E')
     w.flushOut()
   }

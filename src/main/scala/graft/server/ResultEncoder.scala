@@ -47,6 +47,19 @@ final class ResultEncoder private (w: MessageWriter,
     case Copy(csv, d) => (new Array[Boolean](width), true, csv, d.getBytes(UTF_8))
   }
 
+  /** COPY text format: the byte after the backslash that escapes each
+    * byte, 0 for bytes written as they are */
+  private val textEscapes = {
+    val t = new Array[Byte](256)
+    if (isCopy && !copyCsv) {
+      if (delim.length == 1) t(delim(0) & 0xff) = delim(0)
+      t('\\') = '\\'
+      Seq('\b' -> 'b', '\f' -> 'f', '\n' -> 'n', '\r' -> 'r', '\t' -> 't', '\u000b' -> 'v')
+        .foreach { case (c, e) => t(c) = e.toByte }
+    }
+    t
+  }
+
   /** the Dataset's own `Row` deserializer, as `toLocalIterator` uses
     * it; bound on the first value that falls back */
   private lazy val toRow =
@@ -144,7 +157,7 @@ final class ResultEncoder private (w: MessageWriter,
       else {
         val start = w.pos
         putText(row, i)
-        if (copyCsv) csvQuote(start)
+        if (copyCsv) csvQuote(start) else textEscape(start)
       }
       i += 1
     }
@@ -183,6 +196,31 @@ final class ResultEncoder private (w: MessageWriter,
       }
       buf(start) = '"'
       w.pos = end + quotes + 2
+    }
+  }
+
+  /** pg text-format escaping of the value written since `start`:
+    * backslash and the delimiter get a backslash in front, and BS, FF,
+    * LF, CR, TAB and VT become `\b \f \n \r \t \v`. */
+  private def textEscape(start: Int): Unit = {
+    val end = w.pos
+    var extra = 0
+    var p = start
+    while (p < end) { if (textEscapes(w.buf(p) & 0xff) != 0) extra += 1; p += 1 }
+    if (extra > 0) {
+      w.ensure(extra)
+      val buf = w.buf
+      // shift right from the end, inserting the backslashes
+      var src = end - 1
+      var dst = end + extra - 1
+      while (src >= start) {
+        val c = buf(src)
+        val e = textEscapes(c & 0xff)
+        if (e != 0) { buf(dst) = e; buf(dst - 1) = '\\'; dst -= 2 }
+        else { buf(dst) = c; dst -= 1 }
+        src -= 1
+      }
+      w.pos = end + extra
     }
   }
 
@@ -339,7 +377,8 @@ object ResultEncoder {
   sealed trait Mode
   /** DataRow messages; `binary(i)` ships column i in format 1 */
   final case class DataRows(binary: Array[Boolean]) extends Mode
-  /** COPY TO STDOUT CopyData lines, pg text format or CSV */
+  /** COPY TO STDOUT CopyData lines, pg text format (values escaped as
+    * pg does) or CSV */
   final case class Copy(csv: Boolean, delim: String) extends Mode
 
   /** Start executing `df` and return the encoder over its rows. */

@@ -1,16 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, FloatType, LongType, StringType, StructType}
 
 /** Bridge into `private[sql]` Spark internals needed by graft's native
   * Catalyst expressions (Column↔Expression conversion, the
   * AbstractDataType input-type contract) and by the wire server's
-  * result encoder. Lives under the
+  * result encoder and COPY FROM STDIN. Lives under the
   * org.apache.spark.sql namespace for access; contains no graft logic.
   */
 object ColumnBridge {
@@ -41,4 +44,16 @@ object ColumnBridge {
         qe.executedPlan.executeToIterator()
       }
     }
+
+  /** `rows`, already of `schema`'s types, as a one-partition DataFrame
+    * whose plan knows its size. Not a `LocalRelation`: that holds the
+    * rows in the plan, and each analyzer rule that transforms
+    * expressions without tree-pattern pruning walks every row (about
+    * 60 ms per analysis of 20k rows on a 4-core x86 host). */
+  def rowsFrame(session: SparkSession, schema: StructType,
+      rows: Seq[InternalRow], sizeInBytes: Long): DataFrame = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema),
+      s.sparkContext.parallelize(rows, 1))(s, Some(Statistics(sizeInBytes))))
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import java.net.Socket
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{Duration, Instant, LocalDate, LocalDateTime, Period}
 
@@ -19,15 +18,16 @@ import graft.server.{PgTypes, PgWire, PgWireServer, ResultEncoder}
   * (the `Row` from `toLocalIterator`, [[PgTypes.render]] /
   * [[PgTypes.renderBinary]], one framed message per row), in all four
   * modes: text DataRow, binary DataRow, COPY text and COPY CSV. The
-  * two intended changes (binary timestamps before 1970, CSV NULL vs
-  * '' and CR quoting) have their own tests below.
+  * intended changes (binary timestamps before 1970, CSV NULL vs '' and
+  * CR quoting) have their own tests below; text-format escaping is
+  * pinned in CopyInSpec.
   */
 class ResultEncodingSpec extends SparkSpecBase {
 
   // ------------------------------------------------------------ old path
 
-  /** The replaced loops, kept as the reference. Only CSV quoting
-    * differs from them, by the fix marked below. */
+  /** The replaced loops, kept as the reference. CSV quoting and
+    * text-format escaping differ from them, by the fixes marked below. */
   private object Old {
     private def frame(out: DataOutputStream, t: Char, payload: Array[Byte]): Unit = {
       out.writeByte(t); out.writeInt(payload.length + 4); out.write(payload)
@@ -67,6 +67,19 @@ class ResultEncodingSpec extends SparkSpecBase {
             s.contains("\r"))
           "\"" + s.replace("\"", "\"\"") + "\""
         else s
+      // fix: pg text format escapes backslash, the delimiter, BS, FF,
+      // LF, CR, TAB and VT
+      def textEscape(s: String): String = s.flatMap {
+        case '\\' => "\\\\"
+        case '\b' => "\\b"
+        case '\f' => "\\f"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case '\u000b' => "\\v"
+        case c if delim == c.toString => "\\" + c
+        case c => c.toString
+      }
       if (csv && header)
         frame(out, 'd', (fields.map(f => csvQuote(f.name)).mkString(delim) + "\n").getBytes(UTF_8))
       val it = df.toLocalIterator()
@@ -75,7 +88,7 @@ class ResultEncodingSpec extends SparkSpecBase {
         val line = fields.indices.map { i =>
           PgTypes.render(row.get(i), fields(i).dataType) match {
             case None => if (csv) "" else "\\N"
-            case Some(s) => if (csv) csvQuote(s) else s
+            case Some(s) => if (csv) csvQuote(s) else textEscape(s)
           }
         }.mkString(delim)
         frame(out, 'd', (line + "\n").getBytes(UTF_8))
@@ -237,51 +250,10 @@ class ResultEncodingSpec extends SparkSpecBase {
 
   private lazy val port = new PgWireServer(spark, port = 0).start()
 
-  /** Minimal pg frontend that keeps every backend message raw. */
-  private final class Wire {
-    private val sock = new Socket("127.0.0.1", port)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new DataOutputStream(sock.getOutputStream)
-
-    def send(t: Char, parts: Array[Byte]*): Unit = {
-      val p = parts.flatten.toArray
-      out.writeByte(t); out.writeInt(p.length + 4); out.write(p); out.flush()
-    }
-    def read(): (Char, Array[Byte]) = {
-      val t = in.readByte().toChar
-      val p = new Array[Byte](in.readInt() - 4)
-      in.readFully(p)
-      t -> p
-    }
-    /** messages up to and including the first one of a type in `stop` */
-    def until(stop: Char*): Vector[(Char, Array[Byte])] = {
-      val b = Vector.newBuilder[(Char, Array[Byte])]
-      var m = read()
-      while (!stop.contains(m._1)) { b += m; m = read() }
-      b += m
-      b.result()
-    }
-
-    locally {
-      val params = "user\u0000t\u0000database\u0000main\u0000\u0000".getBytes(UTF_8)
-      out.writeInt(8 + params.length); out.writeInt(196608); out.write(params); out.flush()
-      until('Z')
-    }
-
-    def query(sql: String): Vector[(Char, Array[Byte])] = { send('Q', cstr(sql)); until('Z') }
-    def close(): Unit = { send('X'); sock.close() }
-  }
-
-  private def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
-  private def i16(v: Int) = Array((v >> 8).toByte, v.toByte)
-  private def i32(v: Int) = java.nio.ByteBuffer.allocate(4).putInt(v).array()
-  private def tag(m: Vector[(Char, Array[Byte])]) =
-    m.collect { case ('C', p) => new String(p, 0, p.length - 1, UTF_8) }
-  private def errorText(m: Vector[(Char, Array[Byte])]) =
-    m.collect { case ('E', p) => new String(p, UTF_8) }.mkString
+  import WireClient._
 
   test("maxRows suspension inside chunks, two named portals interleaved") {
-    val c = new Wire
+    val c = new WireClient(port)
     val sqlA = "SELECT range AS id, CAST(range * 3 AS STRING) AS s FROM range(23456)"
     val sqlB = "SELECT CAST(range AS DOUBLE) * 0.5 AS d, range % 2 = 0 AS b FROM range(17000)"
     // A text, B with binary results; 777 and 1234 rows per Execute land
@@ -323,7 +295,7 @@ class ResultEncodingSpec extends SparkSpecBase {
   }
 
   test("binary timestamps before 1970 keep their fractional second") {
-    val c = new Wire
+    val c = new WireClient(port)
     val sql = "SELECT CAST('1969-12-31 23:59:59.5' AS TIMESTAMP) AS t, " +
       "CAST('1969-12-31 23:59:59.5' AS TIMESTAMP_NTZ) AS n, " +
       "CAST('1900-01-01 00:00:00.25' AS TIMESTAMP) AS e"
@@ -349,7 +321,7 @@ class ResultEncodingSpec extends SparkSpecBase {
   }
 
   test("COPY CSV keeps NULL and '' apart and quotes CR, out and back in") {
-    val c = new Wire
+    val c = new WireClient(port)
     val out = c.query("COPY (SELECT '' AS a, CAST(NULL AS STRING) AS b, " +
       "concat('x', chr(13), 'y') AS c, 1 AS d) TO STDOUT (FORMAT csv)")
     assert(out.collect { case ('d', p) => new String(p, UTF_8) } == Seq("\"\",,\"x\ry\",1\n"))
@@ -360,14 +332,7 @@ class ResultEncodingSpec extends SparkSpecBase {
     c.send('d', "\"\",,\"x\ry\",1\n,\"\",plain,\n".getBytes(UTF_8))
     c.send('c')
     assert(tag(c.until('Z')) == Seq("COPY 2"))
-    val back = c.query("SELECT a, b, c, d FROM csv_rt ORDER BY c DESC").collect {
-      case ('D', p) =>
-        val b = java.nio.ByteBuffer.wrap(p)
-        (0 until b.getShort()).map { _ =>
-          val n = b.getInt()
-          if (n < 0) None else { val a = new Array[Byte](n); b.get(a); Some(new String(a, UTF_8)) }
-        }
-    }
+    val back = rows(c.query("SELECT a, b, c, d FROM csv_rt ORDER BY c DESC"))
     assert(back == Seq(Seq(Some(""), None, Some("x\ry"), Some("1")),
       Seq(None, Some(""), Some("plain"), None)))
     c.query("DROP TABLE csv_rt")
@@ -386,7 +351,7 @@ class ResultEncodingSpec extends SparkSpecBase {
       assert(!kinds.contains('C'), proto)
       assert(errorText(m).contains("boom"), proto)
     }
-    val c = new Wire
+    val c = new WireClient(port)
     check(c.query(sql), "simple")
     assert(tag(c.query("SELECT 1")) == Seq("SELECT 1"))
     c.send('P', cstr(""), cstr(sql), i16(0))
