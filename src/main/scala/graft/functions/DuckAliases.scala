@@ -220,53 +220,12 @@ object DuckAliases {
     // Java's Formatter rejects Spark's Decimal for %f — PrintfPoly
     // re-types decimal args to double once resolved
     alias("printf")(e => nullGuard(e.tail, PrintfPoly(e)))
-    // ---- vector math on plain lists (r7): DuckDB's list_* vector
-    // family over arbitrary numeric lists, composed from codegen'd
-    // HOFs (the float-array fast path stays ArrayCosineSimilarity) ----
+    // DuckDB's vector family (list_dot_product, list_cosine_similarity,
+    // list_distance, their array_* spellings) is one native kernel;
+    // array_cosine_similarity is registered with the native functions
+    for (fn <- ListVector.names if fn != "array_cosine_similarity")
+      alias(fn)(e => ListVector(e(0), e(1), fn))
     def dvar(n: String) = UnresolvedNamedLambdaVariable(Seq(n))
-    def dsum(arr: Expression): Expression = {
-      val acc = dvar("vacc"); val v = dvar("vv"); val fin = dvar("vfin")
-      ArrayAggregate(arr, Literal(0.0d),
-        LambdaFunction(Add(acc, v), Seq(acc, v)),
-        LambdaFunction(fin, Seq(fin)))
-    }
-    def zipMul(a: Expression, b: Expression): Expression = {
-      val x = dvar("vx"); val y = dvar("vy")
-      ZipWith(a, b, LambdaFunction(
-        Multiply(Cast(x, DoubleType), Cast(y, DoubleType)), Seq(x, y)))
-    }
-    def sq(a: Expression): Expression = {
-      val x = dvar("vq")
-      ArrayTransform(a, LambdaFunction(
-        Multiply(Cast(x, DoubleType), Cast(x, DoubleType)), Seq(x)))
-    }
-    // unequal dimensions ERROR like DuckDB (ZipWith would silently
-    // null-pad); zero-norm cosine is -1.0 (probed — not NULL). A NULL
-    // list NULL-propagates (probed: list_dot_product(NULL, [1.0]) is
-    // NULL) — without the IsNull arm, Size(NULL)=NULL makes the If
-    // predicate NULL → false → RaiseError on any NULL row (advisor r7).
-    def sameDims(a: Expression, b: Expression, out: Expression): Expression =
-      If(Or(IsNull(a), IsNull(b)), Literal(null, DoubleType),
-        If(EqualTo(Size(a, legacySizeOfNull = false),
-            Size(b, legacySizeOfNull = false)), out,
-          Cast(RaiseError(Literal("list dimensions must be equal")), DoubleType)))
-    def listDot(a: Expression, b: Expression): Expression =
-      sameDims(a, b, dsum(zipMul(a, b)))
-    alias("list_dot_product")(e => listDot(e(0), e(1)))
-    alias("list_inner_product")(e => listDot(e(0), e(1)))
-    alias("list_cosine_similarity") { e =>
-      val norms = Multiply(Sqrt(dsum(sq(e(0)))), Sqrt(dsum(sq(e(1)))))
-      sameDims(e(0), e(1),
-        If(EqualTo(norms, Literal(0.0d)), Literal(-1.0d),
-          Divide(dsum(zipMul(e(0), e(1))), norms)))
-    }
-    alias("list_distance") { e =>
-      val x = dvar("vdx"); val y = dvar("vdy")
-      sameDims(e(0), e(1),
-        Sqrt(dsum(ZipWith(e(0), e(1), LambdaFunction(
-          Multiply(Subtract(Cast(x, DoubleType), Cast(y, DoubleType)),
-            Subtract(Cast(x, DoubleType), Cast(y, DoubleType))), Seq(x, y))))))
-    }
     // list_select(l, idxs): 1-based gather; list_where(l, mask): keep
     // where true (an (elem, idx) filter lambda — no null sentinel)
     alias("list_select") { e =>

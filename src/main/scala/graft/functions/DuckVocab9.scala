@@ -972,16 +972,6 @@ object DuckVocab9 {
     // exactly (see CreateSortKey's probe-derived rule table)
     alias("create_sort_key")(e => CreateSortKey(e))
 
-    // spellings that share an existing registered builder 1:1
-    locally {
-      import org.apache.spark.sql.catalyst.FunctionIdentifier
-      def sameAs(newName: String, existing: String): Unit =
-        reg.lookupFunctionBuilder(FunctionIdentifier(existing)).foreach(b =>
-          reg.createOrReplaceTempFunction(newName, b, "built-in"))
-      sameAs("array_distance", "list_distance")
-      sameAs("array_dot_product", "list_dot_product")
-      sameAs("array_inner_product", "list_dot_product")
-    }
     // DuckDB date_trunc returns DATE for day-and-coarser parts
     // (probed; hour and finer stay TIMESTAMP)
     val datePartsToDate = Set("millennium", "century", "decade", "year",

@@ -22,7 +22,7 @@ object Functions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "array_cosine_similarity",
         (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ArrayCosineSimilarity(exprs(0), exprs(1)),
+          ListVector(exprs(0), exprs(1), "array_cosine_similarity"),
         "built-in")
       // geomean as a NATIVE rewrite — exp(avg(ln(x))) — so the whole
       // aggregation stays inside codegen'd HashAggregate. The typed

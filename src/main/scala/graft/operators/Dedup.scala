@@ -358,9 +358,8 @@ object Dedup {
       //   overlap ≤ cnt + min(sz1 − max(rk1), sz2 − max(rk2)),
       // a TRUE upper bound, strictly tighter than the per-row one
       // (which admits any pair sharing a single early-prefix gram).
-      // StageProbe sf10: the (pair × gram-array) verify exchange — the
-      // stream that exhausted the sf100 disk — shrinks by the same
-      // factor as the candidate cut (measured in OPTIMIZATION_r13.md).
+      // Each pair the bound drops also leaves the (pair × gram-array)
+      // verify exchange, the stream that exhausted the sf100 disk.
       // Results unchanged: a dropped pair has overlap < alpha by the
       // bound, so its exact verify must fail; DedupSpec/Round13Spec pin
       // brute-force equivalence at boundary thresholds.

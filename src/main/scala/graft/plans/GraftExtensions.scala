@@ -22,9 +22,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // native scalar expressions
     ext.injectFunction((
       FunctionIdentifier("array_cosine_similarity"),
-      new ExpressionInfo(classOf[ArrayCosineSimilarity].getName,
+      new ExpressionInfo(classOf[ListVector].getName,
         "array_cosine_similarity"),
-      (exprs: Seq[Expression]) => ArrayCosineSimilarity(exprs(0), exprs(1))))
+      (exprs: Seq[Expression]) =>
+        ListVector(exprs(0), exprs(1), "array_cosine_similarity")))
     ext.injectFunction((
       FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinHashSignature].getName,

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkRuntimeException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -8,7 +9,7 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, FloatType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, LongType, StringType, StructType}
 
 /** Bridge into `private[sql]` Spark internals needed by graft's native
   * Catalyst expressions (Column↔Expression conversion, the
@@ -28,8 +29,11 @@ object ColumnBridge {
   def rawConcat(cols: Column*): Column =
     column(org.apache.spark.sql.catalyst.expressions.Concat(
       cols.map(expression)))
-  val floatArrayBinaryInput: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
+  val arrayBinaryInput: Seq[AbstractDataType] = Seq(ArrayType, ArrayType)
+
+  /** The error `raise_error(message)` throws. */
+  def userError(message: String): RuntimeException =
+    new SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> message))
   val stringBinaryInput: Seq[AbstractDataType] = Seq(StringType, StringType)
   val stringUnaryInput: Seq[AbstractDataType] = Seq(StringType)
   val longBinaryInput: Seq[AbstractDataType] = Seq(LongType, LongType)

@@ -5,6 +5,7 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.server.PgWireServer
+import WireClient.{cstr, i16, i32}
 
 /** Wire-level protocol tests via a minimal in-process frontend —
   * replicates the reference's e2e client flow
@@ -338,7 +339,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
     // Parse (unnamed), zero params
     val parse = cstr("") ++ cstr("SELECT n_nationkey FROM nation ORDER BY n_nationkey LIMIT 2") ++ Array[Byte](0, 0)
     c.send('P', parse)
@@ -362,7 +362,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
     c.send('P', cstr("") ++
       cstr("SELECT n_nationkey FROM nation ORDER BY n_nationkey") ++
       Array[Byte](0, 0))
@@ -384,9 +383,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
-    def i16(v: Int) = Array[Byte]((v >> 8).toByte, v.toByte)
-    def i32(v: Int) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def run(sql: String, oids: Seq[Int], params: Seq[(Int, Array[Byte])]) = {
       c.send('P', cstr("") ++ cstr(sql) ++ i16(oids.length) ++
         oids.toArray.flatMap(i32))
@@ -451,9 +447,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
-    def i16(v: Int) = Array[Byte]((v >> 8).toByte, v.toByte)
-    def i32(v: Int) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def run(sql: String, resFmts: Seq[Int]) = {
       c.send('P', cstr("") ++ cstr(sql) ++ i16(0))
       c.send('B', cstr("") ++ cstr("") ++ i16(0) ++ i16(0) ++
@@ -516,9 +509,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = s.getBytes(UTF_8) :+ 0.toByte
-    def i16(v: Int) = Array[Byte]((v >> 8).toByte, v.toByte)
-    def i32(v: Int) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def run(sql: String, oids: Seq[Int], params: Seq[(Int, Array[Byte])]) = {
       c.send('P', cstr("") ++ cstr(sql) ++ i16(oids.length) ++
         oids.toArray.flatMap(i32))
@@ -597,7 +587,6 @@ class PgWireSpec extends SparkSpecBase {
     val (_, port) = server
     val c = new Client(port)
     c.startup()
-    def cstr(s: String) = (s + "\u0000").getBytes(UTF_8)
     c.send('P', cstr("") ++ cstr("SELEKT nope") ++ Array[Byte](0, 0))
     c.send('B', cstr("") ++ cstr("") ++ Array[Byte](0, 0, 0, 0, 0, 0))
     c.send('E', cstr("") ++ Array[Byte](0, 0, 0, 0))

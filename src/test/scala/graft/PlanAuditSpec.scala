@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Plan-shape audit — the properties that carry to a 1000-executor
@@ -224,6 +225,21 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(occurrences <= 2,
       s"q_ann_ivf evaluates the centroid argmax $occurrences times:\n" +
         formatted(ivf).take(3000))
+  }
+
+  test("q_dedup_embedding: list_cosine_similarity runs as one codegen'd kernel") {
+    Tables.registerAll(spark, sfDir)
+    val df = Engine.query(spark, SparkEntry.oracleSql("q_dedup_embedding"))
+    df.collect() // finalize the adaptive plan
+    val exec = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val plan = exec.toString
+    assert(!plan.toLowerCase.contains("lambdafunction"), plan)
+    val uses = plan.linesIterator.filter(_.contains("list_cosine_similarity(")).toSeq
+    assert(uses.nonEmpty && uses.forall(_.contains("*(")),
+      s"the kernel must sit inside whole-stage codegen:\n$plan")
   }
 
   test("candidate-pair operators never plan a cartesian product") {
