@@ -513,17 +513,19 @@ object Engine {
           "paths here are imperative (EXPLAIN would execute them); " +
           "EXPLAIN the equivalent SELECT instead")
     val df = query(spark, inner)
-    if (analyze) {
-      // execute fully through THIS QueryExecution (no driver
-      // materialization) so the reported tree is the final
-      // AQE-replanned one, not a fresh unexecuted copy
-      df.queryExecution.toRdd.foreach(_ => ())
-      Seq(("analyzed_plan", df.queryExecution.executedPlan.toString))
-        .toDF("explain_key", "explain_value")
-    } else
-      Seq(("physical_plan", df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)))
-        .toDF("explain_key", "explain_value")
+    // planned as the wire plans the statement itself
+    val plan = StreamedOrderBy.streaming {
+      if (analyze) {
+        // execute fully through THIS QueryExecution (no driver
+        // materialization) so the reported tree is the final
+        // AQE-replanned one, not a fresh unexecuted copy
+        df.queryExecution.toRdd.foreach(_ => ())
+        "analyzed_plan" -> df.queryExecution.executedPlan.toString
+      } else
+        "physical_plan" -> df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+    }
+    Seq(plan).toDF("explain_key", "explain_value")
   }
 
   private val SummarizeRe = "(?is)\\A\\s*SUMMARIZE\\s+(.+?);?\\s*\\z".r

@@ -19,8 +19,11 @@ import org.apache.spark.sql.types._
   * (decimals through `Decimal.toDouble`); the dot product and both
   * squared norms accumulate in index order from 0.0. So the result is
   * the sequential-sum formula bit for bit: cosine is
-  * `dot / (sqrt(na) * sqrt(nb))`, −1.0 when that product is 0 (DuckDB,
-  * probed), distance is `sqrt(sum((a−b)²))`. No lambda, no intermediate
+  * `dot / (sqrt(na) * sqrt(nb))`, −1.0 when that product is 0, clamped
+  * to [−1, 1] with NaN read as −1.0 (DuckDB 1.0 clamps it so, probed:
+  * rounding can put a vector's similarity with itself above 1.0, and a
+  * NaN or infinite element gives −1.0); distance is
+  * `sqrt(sum((a−b)²))`. No lambda, no intermediate
   * array, no boxing; a higher-order-function composition runs outside
   * whole-stage codegen and boxes every element.
   *
@@ -78,7 +81,8 @@ case class ListVector(left: Expression, right: Expression, fn: String)
       case Dot => dot
       case Cosine =>
         val norms = math.sqrt(nx) * math.sqrt(ny)
-        if (norms == 0.0) -1.0 else dot / norms
+        val r = if (norms == 0.0) -1.0 else dot / norms
+        if (r > 1.0) 1.0 else if (r >= -1.0) r else -1.0
       case Distance => math.sqrt(dot)
     }
   }
@@ -103,9 +107,10 @@ case class ListVector(left: Expression, right: Expression, fn: String)
       val result = metric match {
         case Dot => s"${ev.value} = $dot;"
         case Cosine =>
-          val norms = ctx.freshName("norms")
+          val norms = ctx.freshName("norms"); val r = ctx.freshName("r")
           s"""double $norms = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-             |${ev.value} = $norms == 0.0 ? -1.0 : $dot / $norms;""".stripMargin
+             |double $r = $norms == 0.0 ? -1.0 : $dot / $norms;
+             |${ev.value} = $r > 1.0 ? 1.0 : ($r >= -1.0 ? $r : -1.0);""".stripMargin
         case Distance => s"${ev.value} = java.lang.Math.sqrt($dot);"
       }
       s"""

@@ -495,6 +495,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     // opt-in interval-join rewrite (spark.graft.rangeJoin.binWidth)
     ext.injectOptimizerRule(BinnedRangeJoinRule)
+
+    // a root ORDER BY the wire streams sorts in one range partition
+    ext.injectQueryStagePrepRule(_ => StreamedOrderBy)
   }
 }
 

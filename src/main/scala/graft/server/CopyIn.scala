@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `COPY table FROM STDIN`: the CopyData payloads of one statement,
@@ -105,9 +105,14 @@ private[graft] final class CopyIn(session: SparkSession, table: String,
         .map(i => i -> (try { casts(i).eval(text); None } catch { case NonFatal(c) => Some(c) }))
         .collectFirst { case (i, Some(c)) =>
           val value = text.getUTF8String(i).toString
+          val typeName = pgTypeName(columns(i).dataType)
           val (state, msg) = c match {
+            // a well-formed integer that does not fit: pg's range error
+            case t: SparkThrowable if t.getCondition == "CAST_INVALID_INPUT" &&
+                integral(columns(i).dataType) && IntegerSyntax.matches(value) =>
+              "22003" -> s"""value "$value" is out of range for type $typeName"""
             case t: SparkThrowable if t.getCondition == "CAST_INVALID_INPUT" =>
-              "22P02" -> s"""invalid input syntax for type ${columns(i).dataType.sql.toLowerCase}: "$value""""
+              "22P02" -> s"""invalid input syntax for type $typeName: "$value""""
             case t: SparkThrowable if t.getCondition == "NUMERIC_VALUE_OUT_OF_RANGE" =>
               "22003" -> c.getMessage
             case _ => "22P02" -> c.getMessage
@@ -119,6 +124,22 @@ private[graft] final class CopyIn(session: SparkSession, table: String,
 }
 
 private[graft] object CopyIn {
+
+  /** pg's integer input syntax: optional blanks and sign, then digits */
+  private val IntegerSyntax = "\\s*[+-]?[0-9]+\\s*".r
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** the type's name in pg's messages */
+  private def pgTypeName(t: DataType): String = t match {
+    case ShortType => "smallint"
+    case IntegerType => "integer"
+    case LongType => "bigint"
+    case _ => t.sql.toLowerCase
+  }
 
   /** A COPY input error with its pg SQLSTATE and CONTEXT line. */
   final class Failure(val sqlState: String, msg: String, val context: String)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, Long
   * Catalyst expressions (Column↔Expression conversion, the
   * AbstractDataType input-type contract) and by the wire server's
   * result encoder and COPY FROM STDIN. Lives under the
-  * org.apache.spark.sql namespace for access; contains no graft logic.
+  * org.apache.spark.sql namespace for access; contains no graft logic
+  * beyond scoping [[graft.StreamedOrderBy]] to the wire's execution.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -40,12 +41,17 @@ object ColumnBridge {
   val doubleQuadInput: Seq[AbstractDataType] =
     Seq(DoubleType, DoubleType, DoubleType, DoubleType)
 
-  /** What `Dataset.toLocalIterator` runs, minus its `Row` deserializer. */
+  /** What `Dataset.toLocalIterator` runs, minus its `Row` deserializer.
+    * The plan is built and run with [[graft.StreamedOrderBy]] on: a root
+    * ORDER BY sorts in one partition, which is all the iterator's
+    * one-partition-per-job pull can use. */
   def toLocalInternalIterator(qe: QueryExecution): Iterator[InternalRow] =
-    SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
-      QueryExecution.withInternalError("""The "toLocalIterator" action failed.""") {
-        qe.executedPlan.resetMetrics()
-        qe.executedPlan.executeToIterator()
+    graft.StreamedOrderBy.streaming {
+      SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+        QueryExecution.withInternalError("""The "toLocalIterator" action failed.""") {
+          qe.executedPlan.resetMetrics()
+          qe.executedPlan.executeToIterator()
+        }
       }
     }
 

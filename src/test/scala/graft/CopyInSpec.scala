@@ -167,6 +167,31 @@ class CopyInSpec extends SparkSpecBase {
     c.close()
   }
 
+  test("an out-of-range integer is 22003, a malformed one 22P02, as pg reports them") {
+    val c = new WireClient(port)
+    c.query("DROP TABLE IF EXISTS cin_range")
+    assert(errorText(c.query("CREATE TABLE cin_range (s SMALLINT, i INTEGER, b BIGINT)")) == "")
+    val sql = "COPY cin_range FROM STDIN (FORMAT csv)"
+    val cases = Seq(
+      ("40000,1,1", "22003", "value \"40000\" is out of range for type smallint", "s", "40000"),
+      ("1,-2147483649,1", "22003", "value \"-2147483649\" is out of range for type integer", "i", "-2147483649"),
+      ("1,1,+9223372036854775808", "22003",
+        "value \"+9223372036854775808\" is out of range for type bigint", "b", "+9223372036854775808"),
+      ("1,1.5,1", "22P02", "invalid input syntax for type integer: \"1.5\"", "i", "1.5"),
+      ("1,1,12x", "22P02", "invalid input syntax for type bigint: \"12x\"", "b", "12x"))
+    for ((record, state, msg, column, value) <- cases) {
+      val m = c.copyIn(sql, Seq(bytes(s"1,2,3\n$record\n")))
+      assert(copyState(m).contains(state), s"$record: ${errorText(m)}")
+      assert(errorFields(m)('M') == msg)
+      assert(errorFields(m)('W') == s"""COPY cin_range, line 2, column $column: "$value"""")
+    }
+    assert(tag(c.copyIn(sql, Seq(bytes("-32768,2147483647,-9223372036854775808\n")))) == Seq("COPY 1"))
+    assert(rows(c.query("SELECT * FROM cin_range")) ==
+      Seq(Seq(Some("-32768"), Some("2147483647"), Some("-9223372036854775808"))))
+    c.query("DROP TABLE cin_range")
+    c.close()
+  }
+
   test("STDIN COPY rejects duplicate keys as INSERT does") {
     val c = new WireClient(port)
     c.query("DROP TABLE IF EXISTS cin_pk")

@@ -35,10 +35,15 @@ class ListVectorSpec extends SparkSpecBase {
     def nullIfNull(a: Expression, b: Expression, out: Expression): Expression =
       If(Or(IsNull(a), IsNull(b)), Literal(null, DoubleType), out)
     def dot(a: Expression, b: Expression) = nullIfNull(a, b, dsum(zipMul(a, b)))
+    /** the composition, clamped to [-1, 1] with NaN as -1.0, as
+      * DuckDB 1.0 clamps it */
     def cosine(a: Expression, b: Expression) = {
       val norms = Multiply(Sqrt(dsum(sq(a))), Sqrt(dsum(sq(b))))
-      nullIfNull(a, b, If(EqualTo(norms, Literal(0.0d)), Literal(-1.0d),
-        Divide(dsum(zipMul(a, b)), norms)))
+      val r = If(EqualTo(norms, Literal(0.0d)), Literal(-1.0d),
+        Divide(dsum(zipMul(a, b)), norms))
+      nullIfNull(a, b, If(IsNaN(r), Literal(-1.0d),
+        If(GreaterThan(r, Literal(1.0d)), Literal(1.0d),
+          If(LessThan(r, Literal(-1.0d)), Literal(-1.0d), r))))
     }
     def distance(a: Expression, b: Expression) = {
       val x = v("vdx"); val y = v("vdy")
@@ -190,6 +195,28 @@ class ListVectorSpec extends SparkSpecBase {
         assert(got.contains(s"Invalid Input Error: $want"), s"$sql\n$got")
       }
     }
+  }
+
+  test("cosine is clamped to [-1, 1] and NaN gives -1.0, as DuckDB's") {
+    Functions.registerAll(spark)
+    // DuckDB 1.0 answers -1.0 to each of these (probed)
+    val specials = Engine.query(spark,
+      """SELECT list_cosine_similarity([1.0, 'nan'::DOUBLE], [1.0, 2.0]),
+        |  list_cosine_similarity([1.0, 'inf'::DOUBLE], [1.0, 2.0]),
+        |  array_cosine_similarity(CAST([1.0, 'nan'::DOUBLE] AS ARRAY<FLOAT>),
+        |    CAST([1.0, 2.0] AS ARRAY<FLOAT>))""".stripMargin).collect().head
+    assert((0 until 3).map(specials.getDouble) == Seq(-1.0, -1.0, -1.0), specials)
+    // a vector against itself: DuckDB never gives more than 1.0; the
+    // unclamped sqrt(na) * sqrt(nb) formula rounds above it for some
+    val vs = Seq.fill(2000)(Seq.fill(8)(rng.nextGaussian()))
+    def raw(v: Seq[Double]) = { val n = v.map(x => x * x).sum; n / (math.sqrt(n) * math.sqrt(n)) }
+    assert(vs.count(raw(_) > 1.0) > 0)
+    val schema = StructType(Seq(StructField("a", ArrayType(DoubleType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 2), schema)
+    val got = df.selectExpr("list_cosine_similarity(a, a)", "array_cosine_similarity(a, a)").collect()
+    for (r <- got; i <- 0 to 1)
+      assert(r.getDouble(i) <= 1.0 && r.getDouble(i) > 0.999999, r)
+    assert(got.count(_.getDouble(0) == 1.0) >= vs.count(raw(_) > 1.0))
   }
 
   test("array_cosine_similarity of a zero vector is -1.0, as DuckDB's") {

@@ -11,7 +11,8 @@ perfbench sf0.01 parquet), then sends every oracle statement that
 perfbench does not list as failing to both over one client, in the same
 order, and compares the RowDescription, DataRow and CommandComplete
 bytes. Rows whose order differs between the two runs (statements
-without ORDER BY) are compared as multisets and reported separately.
+without ORDER BY, or ties under one) are compared as multisets and
+reported separately, each by name.
 Run it from the root of a checkout; exit status 1 on any difference.
 """
 import json
@@ -66,22 +67,25 @@ def main():
         for s in servers:
             s.wait_ready()
         conns = [Raw(s.port) for s in servers]
-        same = reordered = 0
-        differ = []
+        same = 0
+        reordered, differ = [], []
         for n in names:
             got = [[m for m in c.query(sql[n]) if m[0] in (b"T", b"D", b"C", b"E")] for c in conns]
             if got[0] == got[1]:
                 same += 1
-            elif sorted(got[0]) == sorted(got[1]):
-                reordered += 1
+                continue
+            a, b = got
+            i = next((k for k in range(min(len(a), len(b))) if a[k] != b[k]), min(len(a), len(b)))
+            if sorted(a) == sorted(b):
+                reordered.append(n)
+                print(f"REORDERED {n}: the same {len(a)} messages, in another order from message {i}")
             else:
                 differ.append(n)
-                a, b = got
-                i = next((k for k in range(min(len(a), len(b))) if a[k] != b[k]), min(len(a), len(b)))
                 print(f"DIFF {n}: {len(a)} vs {len(b)} messages, first at {i}: "
                       f"{a[i] if i < len(a) else None!r} / {b[i] if i < len(b) else None!r}")
         print(json.dumps({"statements": len(names), "identical": same,
-                          "identical_as_multiset": reordered, "different": differ}))
+                          "identical_as_multiset": len(reordered), "reordered": reordered,
+                          "different": differ}))
         return 1 if differ else 0
     finally:
         for s in servers:
