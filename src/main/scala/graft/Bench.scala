@@ -45,6 +45,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.timeType.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // Tables.load
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

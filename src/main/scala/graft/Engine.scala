@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Engine core — the "library" entry point (SURVEY §3 entry point 2).
   *
@@ -53,6 +54,8 @@ object Engine {
       // DuckDB's TIME / TIMETZ surface needs Spark 4.1's TimeType
       // (collection-side encoder support is gated behind this flag)
       .config("spark.sql.timeType.enabled", "true")
+      // TIMESTAMP(NANOS) parquet columns read as longs (Tables.load)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // pg/DuckDB double quotes are IDENTIFIERS ("my col", "select"),
       // never string literals — Spark's default reads them as strings,
       // a silent wrong-answer for every quoting wire client
@@ -146,24 +149,20 @@ object Engine {
       case SetVariableRe(name, valueExpr) =>
         val row = query(spark, s"SELECT ($valueExpr) AS v")
         val v = row.collect().head.get(0)
-        sessionVars.put(prepKey(spark, name),
-          (v, row.schema.head.dataType))
+        state(spark).vars.put(name.toLowerCase, (v, row.schema.head.dataType))
         spark.emptyDataFrame
       case ResetVariableRe(name) =>
-        sessionVars.remove(prepKey(spark, name))
+        state(spark).vars.remove(name.toLowerCase)
         spark.emptyDataFrame
       case PrepareRe(name, body) =>
-        prepared.put(prepKey(spark, name), body)
+        state(spark).prepared.put(name.toLowerCase, server.Prepared(body))
         spark.emptyDataFrame
       case DeallocateRe(name) =>
-        prepared.remove(prepKey(spark, name))
+        if (name.equalsIgnoreCase("all")) state(spark).prepared.clear()
+        else state(spark).prepared.remove(name.toLowerCase)
         spark.emptyDataFrame
-      case ExecuteStmtRe(name, argsOrNull)
-          if !name.equalsIgnoreCase("immediate") =>
-        val body = Option(prepared.get(prepKey(spark, name))).getOrElse(
-          throw new IllegalArgumentException(
-            s"""Prepared statement "$name" does not exist"""))
-        query(spark, substParams(body, splitArgs(argsOrNull)))
+      case _ if executeText(spark, sql).isDefined =>
+        query(spark, executeText(spark, sql).get)
       case AttachRe(path, alias) => attach(spark, path, Option(alias))
       case DetachRe(alias) => detach(spark, alias)
       case CreateOrReplaceRe(name, rest) =>
@@ -649,12 +648,6 @@ object Engine {
       .toDF("column_name", "column_type", "null", "key", "default", "extra")
   }
 
-  // ---- SQL-level prepared statements (DuckDB surface: PREPARE name
-  // AS …, EXECUTE name(args), DEALLOCATE [PREPARE] name — delegated
-  // via cpp:52). Per-session (keyed by SparkSession identity) like
-  // DuckDB's per-connection statements; EXECUTE substitutes $N /
-  // positional ? parameters textually outside string literals, which
-  // matches DuckDB's re-bind semantics for literal arguments.
   // ---- WITH RECURSIVE … UNION (distinct) — Spark 4.1's native
   // recursion only takes UNION ALL; DuckDB's UNION form dedups per
   // round and terminates on cycles. Semi-naive fixpoint: each round
@@ -725,7 +718,7 @@ object Engine {
   // expressions applied (DuckDB returns NEW values), for INSERT the
   // once-evaluated source widened to the full row (declared column
   // defaults fill the gaps).
-  private def splitReturning(sql: String): Option[(String, String)] = {
+  private[graft] def splitReturning(sql: String): Option[(String, String)] = {
     if (!sql.toLowerCase.contains("returning")) return None
     val re = """(?i)\bRETURNING\b""".r
     re.findAllMatchIn(sql).toSeq.lastOption.flatMap { m =>
@@ -752,6 +745,20 @@ object Engine {
   private val RetUpdateFromRe =
     ("""(?is)\A\s*UPDATE\s+([\w.]+)\s+SET\s+(.+?)\s+FROM\s+""" +
       """([\w.]+(?:\s+\w+)?)\s+WHERE\s+(.+?)\s*\z""").r
+
+  private val DmlTargetRe =
+    """(?is)\A\s*(?:INSERT\s+(?:OR\s+\w+\s+)?INTO|UPDATE|DELETE\s+FROM)\s+([\w."]+)""".r
+
+  /** The row type a DML … RETURNING statement answers, found without
+    * running it: the RETURNING list over the target table (wire
+    * Describe). */
+  def returningShape(spark: SparkSession, sql: String)
+      : org.apache.spark.sql.types.StructType = {
+    val (body, ret) = splitReturning(sql).get
+    val table = DmlTargetRe.findFirstMatchIn(body).map(_.group(1)).getOrElse(
+      throw new IllegalArgumentException(s"no target table in: $body"))
+    query(spark, s"SELECT $ret FROM $table WHERE false").schema
+  }
 
   private def returningStmt(spark: SparkSession, sql: String): DataFrame = {
     val (body, ret) = splitReturning(sql).get
@@ -902,77 +909,60 @@ object Engine {
     """(?is)\A\s*SET\s+VARIABLE\s+(\w+)\s*=\s*(.+?);?\s*\z""".r
   private val ResetVariableRe =
     """(?is)\A\s*RESET\s+VARIABLE\s+(\w+)\s*;?\s*\z""".r
-  private val sessionVars =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      (Any, org.apache.spark.sql.types.DataType)]()
-
   /** resolution-time lookup for the getvariable registry alias */
   def variableLiteral(spark: SparkSession, name: String)
       : org.apache.spark.sql.catalyst.expressions.Literal =
-    Option(sessionVars.get(prepKey(spark, name))) match {
+    Option(state(spark).vars.get(name.toLowerCase)) match {
       case Some((v, dt)) =>
         org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)
       case None => org.apache.spark.sql.catalyst.expressions.Literal(null,
         org.apache.spark.sql.types.NullType)
     }
 
+  // ---- SQL-level prepared statements (DuckDB surface: PREPARE name
+  // AS …, EXECUTE name(args), DEALLOCATE [PREPARE] name|ALL —
+  // delegated via cpp:52), per session like DuckDB's per-connection
+  // statements. EXECUTE splices each argument into the $N / ?
+  // placeholders as an expression, which matches DuckDB's re-bind
+  // semantics for literal arguments.
   private val PrepareRe =
     """(?is)\A\s*PREPARE\s+([A-Za-z_]\w*)\s+AS\s+(.+?);?\s*\z""".r
   private val ExecuteStmtRe =
     """(?is)\A\s*EXECUTE\s+([A-Za-z_]\w*)\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*\z""".r
   private val DeallocateRe =
     """(?is)\A\s*DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private def prepKey(spark: SparkSession, name: String): (Int, String) =
-    (System.identityHashCode(spark), name.toLowerCase)
 
-  /** top-level comma split, quote- and paren-aware */
-  private def splitArgs(s: String): Seq[String] = {
-    if (s == null || s.trim.isEmpty) return Nil
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => parts += cur.toString; cur.clear()
-        case other => cur += other
-      }
-    }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.toSeq.map(_.trim)
+  /** What one session owns beyond Spark's own state: its prepared
+    * statements — SQL-level PREPARE and the wire's Parse share one
+    * namespace, as in pg — and its SET VARIABLE values. */
+  final class SessionState {
+    val prepared = new java.util.concurrent.ConcurrentHashMap[String, server.Prepared]()
+    val vars = new java.util.concurrent.ConcurrentHashMap[String,
+      (Any, org.apache.spark.sql.types.DataType)]()
   }
+  /** weakly keyed, so each state goes away with its session */
+  private val states = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SessionState]())
+  def state(spark: SparkSession): SessionState =
+    states.computeIfAbsent(spark, _ => new SessionState)
+  /** drop a session's state now (a closed wire connection) */
+  def endSession(spark: SparkSession): Unit = states.remove(spark)
+  private[graft] def sessionStates: Int = states.size
 
-  /** replace $N / ? parameter markers outside string literals */
-  private def substParams(sql: String, args: Seq[String]): String = {
-    val sb = new StringBuilder
-    var i = 0; var inStr = false; var pos = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else c match {
-        case '\'' => inStr = true; sb += c; i += 1
-        case '$' if i + 1 < sql.length && sql.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j).isDigit) j += 1
-          val n = sql.substring(i + 1, j).toInt
-          require(n >= 1 && n <= args.length,
-            s"prepared parameter $$$n has no binding " +
-              s"(${args.length} argument(s) given)")
-          sb ++= s"(${args(n - 1)})"; i = j
-        case '?' =>
-          require(pos < args.length,
-            s"prepared statement expects more than ${args.length} argument(s)")
-          sb ++= s"(${args(pos)})"; pos += 1; i += 1
-        case other => sb += other; i += 1
-      }
+  /** The statement `EXECUTE name(args)` stands for: the session's
+    * prepared `name` with the arguments spliced into its placeholders.
+    * None when `sql` is not an EXECUTE of a prepared statement. */
+  def executeText(spark: SparkSession, sql: String): Option[String] =
+    sql match {
+      case ExecuteStmtRe(name, argsOrNull)
+          if !name.equalsIgnoreCase("immediate") =>
+        val p = Option(state(spark).prepared.get(name.toLowerCase)).getOrElse(
+          throw new IllegalArgumentException(
+            s"""Prepared statement "$name" does not exist"""))
+        Some(server.BindParams.splice(p.sql,
+          server.BindParams.splitArgs(argsOrNull)))
+      case _ => None
     }
-    sb.toString
-  }
   private val CreateMacroRe =
     // the param list matches lazily up to the first ")  AS" so default
     // values may themselves contain calls: m(a, b := least(1, 2)) AS …
@@ -1422,26 +1412,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** per-(session, dir, table) DataFrame cache: every corpus query
-    * calls load(), and an uncached load costs a file listing + parquet
+  /** per-(dir, table) analyzed read plan: every corpus query calls
+    * load(), and an uncached load costs a file listing + parquet
     * footer schema read — ~50-100 ms of pure driver latency that
-    * dominated the per-query floor at small SF. The cached object is
-    * just the analyzed read plan; execution still streams from disk.
+    * dominated the per-query floor at small SF, and about 1 s per wire
+    * connection for all ten views. Each caller gets a DataFrame of the
+    * cached plan in its own session; execution still streams from
+    * disk.
     */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val loadCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadCache.computeIfAbsent((spark, dir, name), _ => {
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) — which
-      // Spark's reader rejects (PARQUET_TYPE_ILLEGAL) unless read as a
-      // long — in some data drops and TIMESTAMP(MICROS) in others, so
-      // normalize from whatever the footer says to a session-TZ
-      // TimestampType column. Nanos convert with integer arithmetic (a
-      // double division would lose precision above 2^53 ns).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ColumnBridge.ofPlan(spark, loadCache.computeIfAbsent((dir, name), _ => {
+      // events.ts has shipped as parquet TIMESTAMP(NANOS) — read as a
+      // long (spark.sql.legacy.parquet.nanosAsLong, set where the
+      // session is built) — in some data drops and TIMESTAMP(MICROS)
+      // in others, so normalize from whatever the footer says to a
+      // session-TZ TimestampType column. Nanos convert with integer
+      // arithmetic (a double division would lose precision above
+      // 2^53 ns).
       val df = spark.read.parquet(s"$dir/$name.parquet")
-      if (name == "events") {
+      (if (name == "events") {
         import org.apache.spark.sql.types.{LongType, TimestampNTZType}
         df.schema("ts").dataType match {
           case LongType => // nanos-as-long drop
@@ -1452,14 +1444,14 @@ object Tables {
               df("ts").cast(org.apache.spark.sql.types.TimestampType))
           case _ => df
         }
-      } else df
-    })
+      } else df).queryExecution.analyzed
+    }))
 
   /** Register every table as a temp view in the session catalog —
     * the Spark analogue of the reference's shared catalog
-    * (src/duckdb_pgwire_extension.cpp:40). Idempotent AND cached per
-    * (session, dir): re-registration costs 10 parquet footer reads,
-    * which dominated the SQL-path queries' latency.
+    * (src/duckdb_pgwire_extension.cpp:40). Idempotent per (session,
+    * dir); the views share [[load]]'s cached plans, so a new session
+    * reads no parquet footer.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     val marker = "graft.tables.dir"

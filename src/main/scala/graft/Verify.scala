@@ -24,6 +24,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.timeType.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // Tables.load
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,8 +4,17 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import PgWire.Oid
 
-/** Extended-protocol parameter binding: renders Bind values as SQL
-  * literals and splices them into `$N` placeholders before planning.
+/** A statement as Parse or SQL-level PREPARE stored it: its text and
+  * the parameter type OIDs the client declared (may be shorter than
+  * the placeholder count — drivers send 0 for inferred types). */
+final case class Prepared(sql: String, oids: Array[Int] = Array.emptyIntArray) {
+  lazy val nParams: Int = BindParams.paramCount(sql)
+  def oidAt(i: Int): Int = if (i < oids.length) oids(i) else 0
+}
+
+/** Parameter binding, for Bind and for SQL-level EXECUTE: renders Bind
+  * values as SQL literals and splices arguments into the `$N` / `?`
+  * placeholders before planning.
   *
   * The reference drops bind parameters on the floor
   * (src/duckdb_pgwire_extension.cpp:91-92), which breaks every real
@@ -19,83 +28,103 @@ object BindParams {
   /** Bind/statement mismatch (08P01 protocol violation). */
   final class BindException(msg: String) extends RuntimeException(msg)
 
-  /** Highest `$N` placeholder outside quoted strings/identifiers. */
-  def paramCount(sql: String): Int = {
-    var mx = 0; var i = 0; var inS = false; var inD = false
+  /** Walk `sql` outside string literals (`'…'`, and `E'…'` with its
+    * backslash escapes), quoted identifiers and comments (`--`,
+    * `/* */`): `code(i)` sees each index of plain SQL text and returns
+    * the index to go on from. The one lexer behind [[paramCount]],
+    * [[splice]] and [[splitArgs]]. */
+  private def scan(sql: String)(code: Int => Int): Unit = {
+    def past(from: Int, end: String) = {
+      val k = sql.indexOf(end, from)
+      if (k < 0) sql.length else k + end.length
+    }
+    var i = 0
     while (i < sql.length) {
-      val c = sql(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inD) { if (c == '"') inD = false }
-      else c match {
-        case '\'' => inS = true
-        case '"' => inD = true
-        case '$' =>
-          var j = i + 1; var n = 0
-          while (j < sql.length && sql(j).isDigit) { n = n * 10 + (sql(j) - '0'); j += 1 }
-          if (j > i + 1) mx = math.max(mx, n)
-          i = j - 1
+      val next = if (i + 1 < sql.length) sql(i + 1) else '\u0000'
+      i = sql(i) match {
+        case '\'' =>
+          val escapes = i > 0 && (sql(i - 1) == 'E' || sql(i - 1) == 'e') &&
+            (i < 2 || !(sql(i - 2).isLetterOrDigit || sql(i - 2) == '_'))
+          var j = i + 1
+          while (j < sql.length && sql(j) != '\'')
+            j += (if (escapes && sql(j) == '\\') 2 else 1)
+          j + 1
+        case '"' => past(i + 1, "\"")
+        case '-' if next == '-' => past(i + 2, "\n")
+        case '/' if next == '*' => past(i + 2, "*/")
+        case _ => code(i)
+      }
+    }
+  }
+
+  /** The index just past a placeholder starting at `i`, or -1. */
+  private def markerEnd(sql: String, i: Int): Int = sql(i) match {
+    case '?' => i + 1
+    case '$' =>
+      var j = i + 1
+      while (j < sql.length && sql(j).isDigit) j += 1
+      if (j > i + 1) j else -1
+    case _ => -1
+  }
+
+  /** How many parameters `sql` takes: its highest `$N`, or its number
+    * of `?` (DuckDB numbers those left to right). */
+  def paramCount(sql: String): Int = {
+    var n = 0; var q = 0
+    scan(sql) { i =>
+      markerEnd(sql, i) match {
+        case -1 => i + 1
+        case end =>
+          if (sql(i) == '?') q += 1
+          else n = math.max(n, sql.substring(i + 1, end).toInt)
+          end
+      }
+    }
+    math.max(n, q)
+  }
+
+  /** `sql` with each placeholder replaced by its argument in
+    * parentheses — `$N` by argument N, each `?` by the next argument —
+    * so that an argument such as `1+1` binds as one value. */
+  def splice(sql: String, args: IndexedSeq[String]): String = {
+    val out = new java.lang.StringBuilder(sql.length + 16)
+    var from = 0; var q = 0
+    scan(sql) { i =>
+      markerEnd(sql, i) match {
+        case -1 => i + 1
+        case end =>
+          val n =
+            if (sql(i) == '?') { q += 1; q }
+            else sql.substring(i + 1, end).toInt
+          if (n < 1 || n > args.length)
+            throw new BindException(
+              s"${args.length} parameter(s) supplied, statement references " +
+                (if (sql(i) == '?') s"parameter $n" else s"$$$n"))
+          out.append(sql, from, i).append('(').append(args(n - 1)).append(')')
+          from = end
+          end
+      }
+    }
+    out.append(sql, from, sql.length).toString
+  }
+
+  /** The top-level, comma-separated arguments of `EXECUTE name(…)`:
+    * commas inside parentheses, brackets, braces, strings or quoted
+    * identifiers do not split. */
+  def splitArgs(s: String): IndexedSeq[String] = {
+    if (s == null || s.trim.isEmpty) return Vector.empty
+    val out = Vector.newBuilder[String]
+    var depth = 0; var from = 0
+    scan(s) { i =>
+      s(i) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case ',' if depth == 0 => out += s.substring(from, i).trim; from = i + 1
         case _ =>
       }
-      i += 1
+      i + 1
     }
-    mx
-  }
-
-  /** Replace `$1..$n` (outside strings) with rendered literals. */
-  def substitute(sql: String, lits: IndexedSeq[String]): String = {
-    val out = new StringBuilder(sql.length + 32)
-    var i = 0; var inS = false; var inD = false
-    while (i < sql.length) {
-      val c = sql(i)
-      if (inS) { out += c; if (c == '\'') inS = false; i += 1 }
-      else if (inD) { out += c; if (c == '"') inD = false; i += 1 }
-      else c match {
-        case '\'' => inS = true; out += c; i += 1
-        case '"' => inD = true; out += c; i += 1
-        case '$' if i + 1 < sql.length && sql(i + 1).isDigit =>
-          var j = i + 1; var n = 0
-          while (j < sql.length && sql(j).isDigit) { n = n * 10 + (sql(j) - '0'); j += 1 }
-          if (n < 1 || n > lits.length)
-            throw new BindException(
-              s"bind message supplies ${lits.length} parameter(s), statement references $$$n")
-          out ++= lits(n - 1)
-          i = j
-        case _ => out += c; i += 1
-      }
-    }
-    out.toString
-  }
-
-  /** DuckDB also spells placeholders `?` (auto-numbered left to
-    * right). Rewrite them to `$1..$n` outside strings / quoted
-    * identifiers so the rest of the param machinery sees one syntax.
-    */
-  def questionToDollar(sql: String): String = {
-    if (!sql.contains('?')) return sql
-    val out = new StringBuilder(sql.length + 8)
-    var i = 0; var inS = false; var inD = false; var n = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (inS) { out += c; if (c == '\'') inS = false; i += 1 }
-      else if (inD) { out += c; if (c == '"') inD = false; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        // line comment: a '?' in it is not a parameter
-        while (i < sql.length && sql(i) != '\n') { out += sql(i); i += 1 }
-      } else if (c == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-        val close = sql.indexOf("*/", i + 2)
-        val end = if (close < 0) sql.length else close + 2
-        out ++= sql.substring(i, end); i = end
-      } else {
-        c match {
-          case '\'' => inS = true; out += c
-          case '"' => inD = true; out += c
-          case '?' => n += 1; out ++= s"$$$n"
-          case _ => out += c
-        }
-        i += 1
-      }
-    }
-    out.toString
+    (out += s.substring(from).trim).result()
   }
 
   private val numRe = """[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.Engine
 import PgWire._
@@ -45,6 +46,7 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), String]()
   private val pidCounter = new java.util.concurrent.atomic.AtomicInteger(1)
   private val secretRng = new java.security.SecureRandom()
+  private val log = org.apache.logging.log4j.LogManager.getLogger(classOf[PgWireServer])
 
   def start(): Int = {
     if (!started.compareAndSet(false, true))
@@ -69,7 +71,11 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
         t.setDaemon(true)
         t.start()
       }
-    } catch { case NonFatal(_) => /* socket closed */ }
+    } catch {
+      case NonFatal(e) if !serverSocket.isClosed =>
+        log.warn(s"pgwire accept loop stopped: ${e.getClass.getName}: ${e.getMessage}")
+      case NonFatal(_) => // stop() closed the socket
+    }
   }
 
   // ---------------------------------------------------------------- session
@@ -82,10 +88,11 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     val w = new MessageWriter(out)
     val pid = pidCounter.getAndIncrement()
     val secret = secretRng.nextInt()
+    var session: SparkSession = null
     try {
       if (!startup(in, out, w, pid, secret)) return
       // per-connection session: shared catalog, private temp views/conf
-      val session = root.newSession()
+      session = root.newSession()
       graft.Functions.registerAll(session)
       onNewSession(session) // e.g. temp-view catalog registration
       // all of this connection's Spark jobs run on this thread → one
@@ -109,8 +116,11 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
         }
       }
     } catch {
-      case NonFatal(_) => // connection torn down
+      case _: java.io.EOFException => // the client left between messages
+      case NonFatal(e) =>
+        log.warn(s"pgwire connection $pid failed: ${e.getClass.getName}: ${e.getMessage}")
     } finally {
+      if (session != null) Engine.endSession(session)
       cancelKeys.remove((pid, secret))
       try sock.close() catch { case NonFatal(_) => }
     }
@@ -156,26 +166,44 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
   }
 }
 
-/** A parsed prepared statement: raw SQL, declared param type OIDs
-  * (may be shorter than the placeholder count — drivers send 0 for
-  * inferred types), and the number of `$N` placeholders found. */
-private final case class Prepared(sql: String, oids: Array[Int], nParams: Int) {
-  def oidAt(i: Int): Int = if (i < oids.length) oids(i) else 0
+/** One statement as [[ConnectionHandler.plan]] classified it; nothing
+  * has run yet. */
+private sealed trait Stmt
+private case object EmptyStmt extends Stmt
+/** A command: it runs when its tag is first asked for, and answers its
+  * CommandComplete tag, or None when completion is deferred (COPY FROM
+  * STDIN). */
+private final class Command(run: => Option[String]) extends Stmt {
+  lazy val tag: Option[String] = run
 }
-private object Prepared { val empty = Prepared("", Array.empty, 0) }
+/** A row set. `df` is resolved once, which for DML … RETURNING runs
+  * the DML; `shape` is its row type, which `effectFreeShape` gives
+  * without running anything. */
+private final class Rows(query: => DataFrame, val tag: Long => String,
+    effectFreeShape: Option[() => StructType] = None) extends Stmt {
+  lazy val df: DataFrame = query
+  lazy val shape: StructType = effectFreeShape.fold(df.schema)(_())
+}
 
-/** Per-connection protocol state machine. */
+/** Per-connection protocol state machine. Both protocols take one
+  * statement path: [[plan]] classifies a statement without running
+  * it, Describe reads the row shape of that plan, and Execute or a
+  * simple Query runs it through [[run]]. */
 private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
 
-  /** prepared statements + portals for the extended protocol. */
-  private var statements = Map.empty[String, Prepared]
-  private var portals = Map.empty[String, String] // name -> bound SQL
-  /** per-portal result-format codes from Bind (0 text, 1 binary);
-    * absent/empty = all-text. Resolved per column at Execute. */
-  private var portalFmts = Map.empty[String, Array[Int]]
-  /** open row streams for partially-executed portals (Execute with a
-    * row limit → PortalSuspended, resumed by the next Execute). */
-  private var portalIters = Map.empty[String, ResultEncoder]
+  /** Parse's named statements, in the session's one prepared-statement
+    * store, which SQL-level PREPARE and EXECUTE also use. */
+  private val statements = Engine.state(session).prepared
+
+  /** A bound statement, planned on first use: Describe and Execute
+    * share the plan, and with it one analysis. `fmts` are Bind's
+    * result-format codes (0 text, 1 binary; none = all text). */
+  private final class Portal(sql: String, val fmts: Array[Int]) {
+    lazy val stmt: Stmt = plan(sql)
+    /** the row stream an Execute opened; it outlives a suspension */
+    var rows: ResultEncoder = _
+  }
+  private var portals = Map.empty[String, Portal]
 
   /** Active COPY FROM STDIN: non-None between CopyInResponse and
     * CopyDone/CopyFail. */
@@ -199,16 +227,14 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     case 'P' | 'B' | 'D' | 'E' | 'C' | 'H' if skipTilSync => true // discarded
     case 'Q' => skipTilSync = false; simpleQuery(msg.reader.cstr()); true
     case 'P' => parse(msg); true
-    case 'B' => bind(msg); true
-    case 'D' => describe(msg); true
-    case 'E' => execute(msg); true
+    case 'B' => extended(bind(msg)); true
+    case 'D' => extended(describe(msg)); true
+    case 'E' => extended(execute(msg)); true
     case 'C' => // Close statement/portal
       val r = msg.reader
       val kind = r.byte().toChar
       val name = r.cstr()
-      if (kind == 'P') { portals -= name; portalIters -= name
-        portalFmts -= name }
-      else statements -= name
+      if (kind == 'P') portals -= name else statements.remove(name)
       w.send('3') // CloseComplete
       true
     case 'S' => skipTilSync = false; readyForQuery(); true // Sync
@@ -229,7 +255,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     var failed = false
     stmts.foreach { stmt =>
       if (!failed && copyIn.isEmpty) {
-        try runStatement(stmt, describeFirst = true)
+        try run(new Portal(stmt, Array.emptyIntArray), Long.MaxValue, describe = true)
         catch {
           case NonFatal(e) => errorResponse(e); failed = true
         }
@@ -242,323 +268,222 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
 
   // --------------------------------------------------------- extended query
 
+  /** An extended-protocol step: a failure answers one ErrorResponse and
+    * discards the rest of the pipeline until Sync. */
+  private def extended(step: => Unit): Unit =
+    try step catch { case NonFatal(e) => errorResponse(e); skipTilSync = true }
+
+  /** Parse only stores the statement. Unlike the reference's
+    * `conn.Prepare` (cpp:52) it analyzes nothing, so errors surface at
+    * Describe or Execute. */
   private def parse(msg: FrontendMessage): Unit = {
     val r = msg.reader
     val name = r.cstr()
     val sql = r.cstr()
-    val nOids = r.int16()
-    val oids = Array.fill(nOids)(r.int32())
-    try {
-      val nParams = BindParams.paramCount(sql)
-      // zero-param statements analyze now so Parse surfaces syntax
-      // errors (cpp:52 semantics); parameterized ones defer to Bind
-      if (nParams == 0 && sql.trim.nonEmpty)
-        Engine.query(session, sql).queryExecution.analyzed
-      statements += name -> Prepared(sql, oids, nParams)
-      w.send('1') // ParseComplete
-    } catch { case NonFatal(e) => errorResponse(e); skipTilSync = true }
+    val oids = Array.fill(r.int16())(r.int32())
+    statements.put(name, Prepared(sql, oids))
+    w.send('1') // ParseComplete
   }
+
+  private def statement(name: String): Prepared =
+    Option(statements.get(name)).getOrElse(throw new IllegalArgumentException(
+      s"""prepared statement "$name" does not exist"""))
+
+  private def portal(name: String): Portal = portals.getOrElse(name,
+    throw new IllegalArgumentException(s"""portal "$name" does not exist"""))
 
   private def bind(msg: FrontendMessage): Unit = {
     val r = msg.reader
-    val portal = r.cstr()
-    val stmt = r.cstr()
-    val prep = statements.getOrElse(stmt, Prepared.empty)
-    try {
-      val nFmt = r.int16()
-      val fmts = Array.fill(nFmt)(r.int16())
-      val nParams = r.int16()
-      val lits = (0 until nParams).map { i =>
-        val len = r.int32()
-        val data = if (len < 0) null else r.bytes(len)
-        // one format code applies to all params; zero means all-text
-        val fmt = if (nFmt == 0) 0 else if (nFmt == 1) fmts(0) else fmts(i)
-        BindParams.literal(prep.oidAt(i), fmt, data)
-      }
-      // result-format codes: 0 text / 1 binary per column (or one
-      // code for all, per protocol §Bind). The reference is text-only
-      // (cpp:119-166); binary encoding here covers the fixed-width
-      // types pgjdbc binaryTransfer / psycopg3 binary cursors request
-      // — a format-1 column whose type has no binary encoder errors
-      // loudly at Execute, like pg's missing-send-function error.
-      val nResFmt = r.int16()
-      val resFmts = Array.fill(nResFmt)(r.int16())
-      if (resFmts.exists(f => f != 0 && f != 1))
-        throw new UnsupportedOperationException(
-          s"unknown result format code ${resFmts.find(f => f != 0 && f != 1).get}")
-      portals += portal -> (
-        if (prep.nParams == 0) prep.sql
-        else BindParams.substitute(prep.sql, lits))
-      if (resFmts.exists(_ != 0)) portalFmts += portal -> resFmts
-      else portalFmts -= portal
-      portalIters -= portal // re-binding resets any suspended stream
-      w.send('2') // BindComplete
-    } catch { case NonFatal(e) => errorResponse(e); skipTilSync = true }
+    val portalName = r.cstr()
+    val prep = statement(r.cstr())
+    val fmts = Array.fill(r.int16())(r.int16())
+    val params = (0 until r.int16()).map { i =>
+      val len = r.int32()
+      val data = if (len < 0) null else r.bytes(len)
+      // one format code applies to all params; zero means all-text
+      BindParams.literal(prep.oidAt(i), fmtAt(fmts, i), data)
+    }
+    // result-format codes: 0 text / 1 binary per column (or one code
+    // for all, per protocol §Bind). The reference is text-only
+    // (cpp:119-166); binary encoding here covers the fixed-width types
+    // pgjdbc binaryTransfer / psycopg3 binary cursors request — a
+    // format-1 column whose type has no binary encoder errors loudly at
+    // Execute, like pg's missing-send-function error.
+    val resFmts = Array.fill(r.int16())(r.int16())
+    resFmts.find(f => f != 0 && f != 1).foreach(f =>
+      throw new UnsupportedOperationException(s"unknown result format code $f"))
+    portals += portalName -> new Portal(BindParams.splice(prep.sql, params), resFmts)
+    w.send('2') // BindComplete
   }
 
   private def describe(msg: FrontendMessage): Unit = {
     val r = msg.reader
     val kind = r.byte().toChar
     val name = r.cstr()
-    val sql = if (kind == 'S') {
-      val prep = statements.getOrElse(name, Prepared.empty)
+    val (stmt, fmts) = if (kind == 'S') {
+      val prep = statement(name)
       // ParameterDescription precedes the row shape (protocol order)
       w.int16(prep.nParams)
-      var i = 0
-      while (i < prep.nParams) {
+      for (i <- 0 until prep.nParams) {
         val oid = prep.oidAt(i)
         w.int32(if (oid == 0) PgWire.Oid.Text else oid)
-        i += 1
       }
       w.send('t')
-      // typed NULLs stand in for $N so the row shape analyzes pre-Bind
-      if (prep.nParams == 0) prep.sql
-      else BindParams.substitute(prep.sql,
-        (0 until prep.nParams).map(i => BindParams.nullLiteral(prep.oidAt(i))))
-    } else portals.getOrElse(name, "")
-    if (sql.trim.isEmpty || !returnsRows(sql)) { w.send('n'); return } // NoData
-    try {
-      val df = Engine.query(session, sql)
-      // a portal describe reports the formats Bind chose; a statement
-      // describe predates Bind, so its codes are always 0 (protocol)
-      rowDescription(df, if (kind == 'P')
-        portalFmts.getOrElse(name, Array.emptyIntArray)
-      else Array.emptyIntArray)
-    } catch { case NonFatal(e) => errorResponse(e); skipTilSync = true }
+      // typed NULLs stand in for the parameters before any Bind; a
+      // statement describe predates Bind, so its format codes are 0
+      (plan(BindParams.splice(prep.sql,
+        (0 until prep.nParams).map(i => BindParams.nullLiteral(prep.oidAt(i))))),
+        Array.emptyIntArray)
+    } else {
+      val p = portal(name)
+      (p.stmt, p.fmts)
+    }
+    stmt match {
+      case rows: Rows => rowDescription(rows.shape, fmts)
+      case _ => w.send('n') // NoData
+    }
   }
 
   private def execute(msg: FrontendMessage): Unit = {
     val r = msg.reader
-    val portal = r.cstr()
+    val name = r.cstr()
     val maxRows = r.int32()
-    val sql = portals.getOrElse(portal, "")
-    if (sql.trim.isEmpty) { w.send('I'); return } // EmptyQueryResponse
-    try {
-      val resuming = portalIters.contains(portal)
-      // a portal bound with binary result formats always streams
-      // through the format-aware path (runStatement is text-only)
-      val hasBinary = portalFmts.get(portal).exists(_.exists(_ != 0))
-      if ((maxRows > 0 || resuming || hasBinary) && returnsRows(sql))
-        executeLimited(portal, sql,
-          if (maxRows > 0) maxRows else Int.MaxValue)
-      else runStatement(sql, describeFirst = false)
-    } catch {
-      case NonFatal(e) =>
-        portalIters -= portal // a failed portal cannot resume
-        errorResponse(e); skipTilSync = true
-    }
+    try run(portal(name), if (maxRows > 0) maxRows else Long.MaxValue, describe = false)
+    catch { case NonFatal(e) => portals -= name; throw e } // it cannot resume
   }
 
-  /** resolve a Bind result-format code for column `i`: zero codes =
-    * all text, one code applies to every column, else positional. */
+  /** resolve a Bind format code for column (or parameter) `i`: zero
+    * codes = all text, one code applies to every column, else
+    * positional. */
   private def fmtAt(fmts: Array[Int], i: Int): Int =
     if (fmts.isEmpty) 0
     else if (fmts.length == 1) fmts(0)
     else if (i < fmts.length) fmts(i) else 0
 
-  /** Execute with a row limit: stream up to `maxRows`, suspend the
-    * portal ('s') if rows remain — how pgjdbc fetchSize pages results.
-    */
-  private def executeLimited(portal: String, sql: String, maxRows: Int): Unit = {
-    val enc = portalIters.getOrElse(portal, {
-      val df = Engine.query(session, sql)
-      val schema = df.schema.fields
-      val fmts = portalFmts.getOrElse(portal, Array.emptyIntArray)
-      // validate binary columns BEFORE streaming: a mid-stream error
-      // would leave a half-emitted row set on the wire
-      var v = 0
-      while (v < schema.length) {
-        if (fmtAt(fmts, v) == 1 && !PgTypes.binarySupported(schema(v).dataType))
-          throw new UnsupportedOperationException(
-            s"binary result format is not supported for column " +
-              s"'${schema(v).name}' of type ${schema(v).dataType.sql}; " +
-              "request text (format 0)")
-        v += 1
-      }
-      ResultEncoder(w, df,
-        ResultEncoder.DataRows(Array.tabulate(schema.length)(fmtAt(fmts, _) == 1)))
-    })
-    val n = enc.stream(maxRows)
-    if (enc.hasNext) {
-      portalIters += portal -> enc
-      w.send('s') // PortalSuspended
-    } else {
-      portalIters -= portal
-      w.cstr(commandTag(sql, n)).send('C')
+  // ------------------------------------------------------------- execution
+
+  /** Run a portal — the one emitter of both protocols. A command
+    * answers its tag. A row set streams at most `limit` DataRows in the
+    * portal's formats, then suspends the portal ('s') if rows remain —
+    * how pgjdbc fetchSize pages results — or completes it. `describe`
+    * sends the RowDescription first (simple query). */
+  private def run(p: Portal, limit: Long, describe: Boolean): Unit = {
+    p.stmt match {
+      case EmptyStmt => w.send('I') // EmptyQueryResponse
+      case c: Command => c.tag.foreach(t => w.cstr(t).send('C'))
+      case rows: Rows =>
+        if (p.rows == null) {
+          val df = rows.df
+          val fields = df.schema.fields
+          // validate binary columns BEFORE streaming: a mid-stream
+          // error would leave a half-emitted row set on the wire
+          val binary = Array.tabulate(fields.length) { i =>
+            val bin = fmtAt(p.fmts, i) == 1
+            if (bin && !PgTypes.binarySupported(fields(i).dataType))
+              throw new UnsupportedOperationException(
+                s"binary result format is not supported for column " +
+                  s"'${fields(i).name}' of type ${fields(i).dataType.sql}; " +
+                  "request text (format 0)")
+            bin
+          }
+          if (describe) rowDescription(df.schema, p.fmts)
+          p.rows = ResultEncoder(w, df, ResultEncoder.DataRows(binary))
+        }
+        val n = p.rows.stream(limit)
+        if (p.rows.hasNext) w.send('s') // PortalSuspended
+        else w.cstr(rows.tag(n)).send('C')
     }
     w.flushOut()
   }
 
-  // ------------------------------------------------------------- execution
+  private def headOf(sql: String): String =
+    sql.trim.takeWhile(!_.isWhitespace).toUpperCase
 
-  private def returnsRows(sql: String): Boolean = {
-    val head = sql.trim.takeWhile(!_.isWhitespace).toUpperCase
-    Set("SELECT", "WITH", "VALUES", "TABLE", "SHOW", "DESCRIBE", "DESC",
-      "EXPLAIN", "FROM", "SUMMARIZE", "PRAGMA", "CALL", "PIVOT",
-      "UNPIVOT", "EXECUTE").contains(head) ||
-      // DML with a top-level RETURNING ships a row set + the DML tag
-      (Set("INSERT", "UPDATE", "DELETE").contains(head) &&
-        """(?i)\bRETURNING\b""".r.findAllMatchIn(sql).exists { m =>
-          val pre = sql.substring(0, m.start)
-          pre.count(_ == '(') == pre.count(_ == ')') &&
-            pre.count(_ == '\'') % 2 == 0
-        })
+  /** statements that answer a row set */
+  private val RowHeads = Set("SELECT", "WITH", "VALUES", "TABLE", "SHOW",
+    "DESCRIBE", "DESC", "EXPLAIN", "FROM", "SUMMARIZE", "PRAGMA", "CALL",
+    "PIVOT", "UNPIVOT", "EXECUTE")
+
+  private def commandTag(sql: String, rows: Long): String = headOf(sql) match {
+    case h if RowHeads(h) => s"SELECT $rows"
+    case "INSERT" => s"INSERT 0 $rows"
+    case "UPDATE" => s"UPDATE $rows"
+    case "DELETE" => s"DELETE $rows"
+    case "BEGIN" => "BEGIN"
+    case "COMMIT" | "END" => "COMMIT"
+    case "ROLLBACK" | "ABORT" => "ROLLBACK"
+    case "SET" => "SET"
+    case "CREATE" => "CREATE " + sql.trim.split("\\s+")
+      .drop(1).headOption.getOrElse("").toUpperCase
+    case "DROP" => "DROP " + sql.trim.split("\\s+")
+      .drop(1).headOption.getOrElse("").toUpperCase
+    case other => other
   }
 
-  private def commandTag(sql: String, rows: Long): String = {
-    val head = sql.trim.takeWhile(!_.isWhitespace).toUpperCase
+  private val insertTableRe =
+    """(?is)^\s*INSERT\s+(?:OR\s+(?:REPLACE|IGNORE)\s+)?INTO\s+([\w.]+).*""".r
+  private val setVariableRe = """(?is)^\s*SET\s+VARIABLE\s""".r
+
+  /** The dispatch both protocols share: classify `sql` and say how it
+    * runs, running nothing. Statements whose effect is the command
+    * itself (DDL, DML, SET, PREPARE, COPY) run when their tag is first
+    * asked for; a row set runs when it is first streamed, or, when it
+    * is free of effects, analyzes when its shape is first asked for. */
+  private def plan(sql: String): Stmt = {
+    def command(run: => String) = new Command(Some(run))
+    def engine = Engine.query(session, sql)
+    val head = headOf(sql)
     head match {
-      case "SELECT" | "WITH" | "VALUES" | "TABLE" | "SHOW" | "DESCRIBE" |
-           "DESC" | "EXPLAIN" | "FROM" | "SUMMARIZE" | "PRAGMA" | "CALL" |
-           "PIVOT" | "UNPIVOT" =>
-        s"SELECT $rows"
-      case "INSERT" => s"INSERT 0 $rows"
-      case "UPDATE" => s"UPDATE $rows"
-      case "DELETE" => s"DELETE $rows"
-      case "BEGIN" => "BEGIN"
-      case "COMMIT" | "END" => "COMMIT"
-      case "ROLLBACK" | "ABORT" => "ROLLBACK"
-      case "SET" => "SET"
-      case "CREATE" => "CREATE " + sql.trim.split("\\s+")
-        .drop(1).headOption.getOrElse("").toUpperCase
-      case "DROP" => "DROP " + sql.trim.split("\\s+")
-        .drop(1).headOption.getOrElse("").toUpperCase
-      case other => other
-    }
-  }
-
-  /** top-level comma split for EXECUTE argument lists. */
-  private def splitArgs(s: String): IndexedSeq[String] = {
-    val out = Vector.newBuilder[String]; val cur = new StringBuilder
-    var depth = 0; var inS = false
-    s.foreach { c =>
-      if (inS) { cur += c; if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case _ => cur += c
-      }
-    }
-    val last = cur.toString.trim
-    if (last.nonEmpty) out += last
-    out.result()
-  }
-
-  private val prepareRe = """(?is)^PREPARE\s+(\w+)\s+AS\s+(.+)$""".r
-  private val executeRe = """(?is)^EXECUTE\s+(\w+)\s*(?:\((.*)\))?\s*$""".r
-  private val deallocRe = """(?is)^DEALLOCATE\s+(?:PREPARE\s+)?(\w+|ALL)$""".r
-
-  private def runStatement(sql: String, describeFirst: Boolean): Unit = {
-    val head = sql.trim.takeWhile(!_.isWhitespace).toUpperCase
-    head match {
-      // SQL-level prepared statements (pg/DuckDB surface the reference
-      // serves through DuckDB): share the extended protocol's
-      // statement namespace; EXECUTE args are SQL literals spliced
-      // into $N exactly like Bind values.
-      case "PREPARE" => sql.trim.stripSuffix(";") match {
-        case prepareRe(name, body0) =>
-          // DuckDB accepts `?` placeholders in SQL-level PREPARE;
-          // normalize to $N so EXECUTE's splice sees one syntax
-          val body = BindParams.questionToDollar(body0)
-          statements += name -> Prepared(body, Array.empty,
-            BindParams.paramCount(body))
-          w.cstr("PREPARE").send('C')
-        case _ => throw new IllegalArgumentException(
-          "PREPARE syntax: PREPARE name AS statement")
-      }
-      case "EXECUTE" => sql.trim.stripSuffix(";") match {
-        case executeRe(name, argsOrNull) =>
-          val prep = statements.getOrElse(name,
-            throw new IllegalArgumentException(s"prepared statement $name does not exist"))
-          val args = Option(argsOrNull).map(splitArgs).getOrElse(Vector.empty)
-          runStatement(
-            if (prep.nParams == 0) prep.sql
-            else BindParams.substitute(prep.sql, args), describeFirst)
-        case _ => throw new IllegalArgumentException(
-          "EXECUTE syntax: EXECUTE name [(arg, ...)]")
-      }
-      case "DEALLOCATE" => sql.trim.stripSuffix(";") match {
-        case deallocRe(name) =>
-          if (name.equalsIgnoreCase("ALL")) statements = Map.empty
-          else statements -= name
-          w.cstr("DEALLOCATE").send('C')
-        case _ => throw new IllegalArgumentException(
-          "DEALLOCATE syntax: DEALLOCATE [PREPARE] name|ALL")
-      }
+      case "" => EmptyStmt
+      case "EXECUTE" if Engine.executeText(session, sql).isDefined =>
+        plan(Engine.executeText(session, sql).get)
       case "BEGIN" | "COMMIT" | "END" | "ROLLBACK" | "ABORT" =>
         // accepted-and-meaningless, observably identical to the
         // reference whose per-query Connection kills txn state (cpp:42)
-        w.cstr(commandTag(sql, 0)).send('C')
-      case "SET" =>
-        setStatement(sql)
-        w.cstr("SET").send('C')
+        command(commandTag(sql, 0))
+      case "SET" if setVariableRe.findFirstIn(sql).isEmpty =>
+        command { setStatement(sql); "SET" }
       case "SHOW" if pgShow(sql).isDefined =>
         // pg session variables drivers probe on connect (pgjdbc sends
         // SHOW TRANSACTION ISOLATION LEVEL); Spark's SHOW TABLES etc.
         // falls through to the engine below
-        val df = pgShow(sql).get
-        if (describeFirst) rowDescription(df)
-        streamRows(df)
-        w.cstr("SHOW").send('C')
-      case "COPY" =>
-        copyStatement(sql) match {
-          case Some(n) => w.cstr(s"COPY $n").send('C')
-          case None => // COPY FROM STDIN: completion deferred to CopyDone
-        }
-      case "UPDATE" if !returnsRows(sql) =>
-        w.cstr(s"UPDATE ${Dml.update(session, sql)}").send('C')
-      case "DELETE" if !returnsRows(sql) =>
-        w.cstr(s"DELETE ${Dml.delete(session, sql)}").send('C')
-      case "UPDATE" | "DELETE" =>
-        // DML with RETURNING: Engine.query splits the clause, runs the
-        // DML, and answers the returned rows
-        val df = Engine.query(session, sql)
-        if (describeFirst) rowDescription(df)
-        val n = streamRows(df)
-        w.cstr(commandTag(sql, n)).send('C')
+        val (colName, value) = pgShow(sql).get
+        new Rows(session.sql(s"SELECT '$value' AS `$colName`"), _ => "SHOW")
+      case "COPY" => new Command(copyStatement(sql).map(n => s"COPY $n"))
+      case "INSERT" | "UPDATE" | "DELETE" if Engine.splitReturning(sql).isDefined =>
+        // Engine.query splits the clause, runs the DML, and answers the
+        // returned rows
+        new Rows(sql match {
+          case insertTableRe(tbl) => Dml.lockFor(tbl).synchronized(engine)
+          case _ => engine
+        }, commandTag(sql, _), Some(() => Engine.returningShape(session, sql)))
+      case "UPDATE" => command(s"UPDATE ${Dml.update(session, sql)}")
+      case "DELETE" => command(s"DELETE ${Dml.delete(session, sql)}")
+      case "INSERT" => command(insert(sql))
+      case "PREPARE" | "DEALLOCATE" => command { engine; head }
+      case "WITH" if Dml.hasTopLevelKeyword(sql, "insert") =>
+        command(s"INSERT 0 ${affectedRows(engine)}")
       case _ =>
         PgCatalogShim.intercept(session, sql) match {
-          case Some(listing) =>
-            if (describeFirst) rowDescription(listing)
-            val n = streamRows(listing)
-            w.cstr(s"SELECT $n").send('C')
-            w.flushOut()
-            return
-          case None =>
-        }
-        // INSERT INTO shares Dml's per-table writer serialization: a
-        // concurrent copy-on-write UPDATE/DELETE snapshotting the same
-        // table mid-append would silently drop the appended rows
-        val insertTableRe =
-          """(?is)^\s*INSERT\s+(?:OR\s+(?:REPLACE|IGNORE)\s+)?INTO\s+([\w.]+).*""".r
-        val df = sql match {
-          case insertTableRe(tbl) =>
-            // DuckDB upsert surface first (Spark's parser has no
-            // ON CONFLICT) — takes its own per-table lock
-            Dml.insertOnConflict(session, sql) match {
-              case Some(n) =>
-                w.cstr(s"INSERT 0 $n").send('C')
-                w.flushOut()
-                return
-              case None =>
-                Dml.lockFor(tbl).synchronized(Engine.query(session, sql))
-            }
-          case _ => Engine.query(session, sql)
-        }
-        if (returnsRows(sql)) {
-          if (describeFirst) rowDescription(df)
-          val n = streamRows(df)
-          w.cstr(commandTag(sql, n)).send('C')
-        } else {
-          // DDL/DML ran eagerly inside Engine.query; the affected-row
-          // count lives in the write command's metrics, not the
-          // (empty) result DataFrame.
-          w.cstr(commandTag(sql, affectedRows(df))).send('C')
+          case Some(listing) => new Rows(listing, n => s"SELECT $n")
+          case None if RowHeads(head) => new Rows(engine, commandTag(sql, _))
+          // DDL ran eagerly inside Engine.query
+          case None => command(commandTag(sql, affectedRows(engine)))
         }
     }
-    w.flushOut()
+  }
+
+  /** INSERT shares Dml's per-table writer serialization: a concurrent
+    * copy-on-write UPDATE/DELETE snapshotting the same table mid-append
+    * would silently drop the appended rows. */
+  private def insert(sql: String): String = sql match {
+    case insertTableRe(tbl) =>
+      // DuckDB upsert surface first (Spark's parser has no ON
+      // CONFLICT) — takes its own per-table lock
+      val n = Dml.insertOnConflict(session, sql).getOrElse(
+        affectedRows(Dml.lockFor(tbl).synchronized(Engine.query(session, sql))))
+      s"INSERT 0 $n"
+    case _ => commandTag(sql, affectedRows(Engine.query(session, sql)))
   }
 
   /** `COPY (query)|table TO 'path' (FORMAT PARQUET|CSV|JSON [, HEADER])`,
@@ -652,11 +577,12 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       case _ => 0L
     }
 
-  /** `SHOW <pg session variable>` → one-row result, like Postgres.
-    * Returns None for anything that is not a known pg variable so
-    * Spark's own SHOW TABLES / SHOW DATABASES still work.
+  /** `SHOW <pg session variable>` → (column name, value) of its
+    * one-row result, like Postgres. Returns None for anything that is
+    * not a known pg variable so Spark's own SHOW TABLES / SHOW
+    * DATABASES still work.
     */
-  private def pgShow(sql: String): Option[DataFrame] = {
+  private def pgShow(sql: String): Option[(String, String)] = {
     val m = """(?is)^SHOW\s+(.+?)\s*;?\s*$""".r
     val varName = sql.trim match {
       case m(v) => v.trim.toLowerCase.replaceAll("\\s+", " ")
@@ -674,9 +600,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
       "search_path" -> ("search_path", "public"),
       "standard_conforming_strings" ->
         ("standard_conforming_strings", "on"))
-    known.get(varName).map { case (colName, value) =>
-      session.sql(s"SELECT '$value' AS `$colName`")
-    }
+    known.get(varName)
   }
 
   /** SET allowlist → session conf; everything else accepted as no-op
@@ -699,9 +623,8 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     }
   }
 
-  private def rowDescription(df: DataFrame,
-      fmts: Array[Int] = Array.emptyIntArray): Unit = {
-    val fields = df.schema.fields
+  private def rowDescription(schema: StructType, fmts: Array[Int]): Unit = {
+    val fields = schema.fields
     w.int16(fields.length)
     var i = 0
     while (i < fields.length) {
@@ -715,12 +638,6 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     }
     w.send('T')
   }
-
-  /** Stream result rows as text DataRows without materializing them
-    * on the driver (SURVEY §1.1's row-wise wire emission). */
-  private def streamRows(df: DataFrame): Long =
-    ResultEncoder(w, df, ResultEncoder.DataRows(new Array(df.schema.length)))
-      .stream(Long.MaxValue)
 
   private def errorResponse(e: Throwable): Unit = {
     w.resetPayload() // drop any half-written DataRow payload

@@ -4,7 +4,7 @@ import org.apache.spark.SparkRuntimeException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, Long
 
 /** Bridge into `private[sql]` Spark internals needed by graft's native
   * Catalyst expressions (Column↔Expression conversion, the
-  * AbstractDataType input-type contract) and by the wire server's
-  * result encoder and COPY FROM STDIN. Lives under the
-  * org.apache.spark.sql namespace for access; contains no graft logic
-  * beyond scoping [[graft.StreamedOrderBy]] to the wire's execution.
+  * AbstractDataType input-type contract), by the wire server's result
+  * encoder and COPY FROM STDIN, and by the shared table plans. Lives
+  * under the org.apache.spark.sql namespace for access; contains no
+  * graft logic beyond scoping [[graft.StreamedOrderBy]] to the wire's
+  * execution.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -54,6 +55,15 @@ object ColumnBridge {
         }
       }
     }
+
+  /** An analyzed `plan` as a DataFrame of `session`, so that one plan
+    * serves many sessions without being analyzed again. Each caller
+    * gets its own root: a Dataset records itself on its root node, and
+    * the shared plan must not collect those records from every
+    * connection's thread. */
+  def ofPlan(session: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      Project(plan.output, plan))
 
   /** `rows`, already of `schema`'s types, as a one-partition DataFrame
     * whose plan knows its size. Not a `LocalRelation`: that holds the

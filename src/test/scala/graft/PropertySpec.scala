@@ -70,8 +70,8 @@ class PropertySpec extends SparkSpecBase {
     val keys = Gen.listOfN(4, Gen.alphaNumChar).map(_.mkString)
     holds(Prop.forAll(keys) { k =>
       val sql = s"SELECT $$1 AS a, '$$2 $k' AS b"
-      val out = graft.server.BindParams.substitute(sql, Vector("7"))
-      out == s"SELECT 7 AS a, '$$2 $k' AS b"
+      val out = graft.server.BindParams.splice(sql, Vector("7"))
+      out == s"SELECT (7) AS a, '$$2 $k' AS b"
     }, cases = 40)
   }
 

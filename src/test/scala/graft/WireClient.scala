@@ -56,6 +56,28 @@ final class WireClient(port: Int) {
     }
   }
 
+  // extended protocol, one message each; `sync` reads the replies
+  def parse(stmt: String, sql: String, oids: Int*): Unit =
+    send('P', cstr(stmt), cstr(sql), i16(oids.length), oids.flatMap(i32).toArray)
+  /** text-format parameters (None = NULL), then the result formats */
+  def bind(portal: String, stmt: String, params: Seq[Option[String]] = Nil,
+      resultFormats: Seq[Int] = Nil): Unit =
+    send('B', cstr(portal), cstr(stmt), i16(0), i16(params.length),
+      params.flatMap {
+        case None => i32(-1)
+        case Some(v) => val b = v.getBytes(UTF_8); i32(b.length) ++ b
+      }.toArray,
+      i16(resultFormats.length), resultFormats.flatMap(i16).toArray)
+  def describe(kind: Char, name: String): Unit = send('D', Array(kind.toByte), cstr(name))
+  def execute(portal: String, maxRows: Int = 0): Unit = send('E', cstr(portal), i32(maxRows))
+  def sync(): Messages = { send('S'); until('Z') }
+
+  /** one unnamed Parse/Bind/Describe(portal)/Execute/Sync round trip */
+  def extended(sql: String, params: Seq[Option[String]] = Nil): Messages = {
+    parse("", sql); bind("", "", params); describe('P', ""); execute("")
+    sync()
+  }
+
   def close(): Unit = { send('X'); sock.close() }
 }
 

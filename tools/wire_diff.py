@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Byte-level wire diff of two builds of the server.
 
-    python3 tools/wire_diff.py BUILD_A.json BUILD_B.json [SF_DIR]
+    python3 tools/wire_diff.py [--extended] BUILD_A.json BUILD_B.json [SF_DIR]
 
 Each BUILD_*.json is the build state perfbench writes for a checkout
 (`.bench_build/perfbench/build-<hash>.json`: classpath, java options
@@ -10,9 +10,11 @@ graft.server.ServerMain per build on the same data (default: the
 perfbench sf0.01 parquet), then sends every oracle statement that
 perfbench does not list as failing to both over one client, in the same
 order, and compares the RowDescription, DataRow and CommandComplete
-bytes. Rows whose order differs between the two runs (statements
-without ORDER BY, or ties under one) are compared as multisets and
-reported separately, each by name.
+bytes. With --extended, B gets each statement as one unnamed
+Parse/Bind/Describe/Execute/Sync round trip instead of a Query, and its
+bytes must still match A's simple-query bytes. Rows whose order differs
+between the two runs (statements without ORDER BY, or ties under one)
+are compared as multisets and reported separately, each by name.
 Run it from the root of a checkout; exit status 1 on any difference.
 """
 import json
@@ -48,17 +50,30 @@ class Raw:
             if t == b"Z":
                 return out
 
+    def frame(self, t, body):
+        return t + struct.pack("!i", len(body) + 4) + body
+
     def query(self, sql):
-        body = sql.encode() + b"\0"
-        self.sock.sendall(b"Q" + struct.pack("!i", len(body) + 4) + body)
+        self.sock.sendall(self.frame(b"Q", sql.encode() + b"\0"))
+        return self.until_ready()
+
+    def extended(self, sql):
+        """unnamed statement and portal, no parameters, text results"""
+        self.sock.sendall(
+            self.frame(b"P", b"\0" + sql.encode() + b"\0" + struct.pack("!h", 0)) +
+            self.frame(b"B", b"\0\0" + struct.pack("!hhh", 0, 0, 0)) +
+            self.frame(b"D", b"P\0") +
+            self.frame(b"E", b"\0" + struct.pack("!i", 0)) +
+            self.frame(b"S", b""))
         return self.until_ready()
 
 
 def main():
-    if len(sys.argv) < 3:
+    args = [a for a in sys.argv[1:] if a != "--extended"]
+    if len(args) < 2:
         sys.exit(__doc__)
-    builds = [json.load(open(p)) for p in sys.argv[1:3]]
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else server.SF001
+    builds = [json.load(open(p)) for p in args[:2]]
+    sf_dir = args[2] if len(args) > 2 else server.SF001
     sql = builds[0]["oracle_sql"]
     names = [n for n in sorted(sql) if n not in workloads.KNOWN_FAILING]
     run_dir = tempfile.mkdtemp(prefix="wire_diff-", dir=server.WORK if os.path.isdir(server.WORK) else None)
@@ -67,10 +82,11 @@ def main():
         for s in servers:
             s.wait_ready()
         conns = [Raw(s.port) for s in servers]
+        runs = [conns[0].query, conns[1].extended if "--extended" in sys.argv else conns[1].query]
         same = 0
         reordered, differ = [], []
         for n in names:
-            got = [[m for m in c.query(sql[n]) if m[0] in (b"T", b"D", b"C", b"E")] for c in conns]
+            got = [[m for m in run(sql[n]) if m[0] in (b"T", b"D", b"C", b"E")] for run in runs]
             if got[0] == got[1]:
                 same += 1
                 continue
