@@ -356,9 +356,7 @@ object Engine {
                 // positions with inferred types via a rebuild of the
                 // still-empty table
                 SqlRewrites.recordPrimaryKey(clean)
-                val r = SqlRewrites.rewriteFull(Macros.expand(clean))
-                val out = r.dropCols.foldLeft(spark.sql(r.sql))(
-                  (df, c) => df.drop(c))
+                val out = spark.sql(Macros.expand(clean))
                 TableConstraints.recordGenerated(table, gcols)
                 val untyped = gcols.filter(_.declaredType.isEmpty)
                 if (untyped.nonEmpty) rebuildTable(spark, table) { df =>
@@ -391,9 +389,7 @@ object Engine {
                       m.group(2).replace("\"", "").replace("`", ""))
                      catch { case _: Exception => false })
                 }
-                val r = SqlRewrites.rewriteFull(Macros.expand(sql))
-                val out = r.dropCols.foldLeft(spark.sql(r.sql))(
-                  (df, c) => df.drop(c))
+                val out = spark.sql(Macros.expand(sql))
                 // plain INSERT answers DuckDB's Count column — the
                 // row count is the executed write command's metric
                 // (no extra job). WITH-led inserts (`WITH cte …
@@ -957,7 +953,7 @@ object Engine {
       case ExecuteStmtRe(name, argsOrNull)
           if !name.equalsIgnoreCase("immediate") =>
         val p = Option(state(spark).prepared.get(name.toLowerCase)).getOrElse(
-          throw new IllegalArgumentException(
+          throw new server.PgWire.UndefinedName("26000",
             s"""Prepared statement "$name" does not exist"""))
         Some(server.BindParams.splice(p.sql,
           server.BindParams.splitArgs(argsOrNull)))

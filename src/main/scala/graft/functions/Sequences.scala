@@ -93,6 +93,11 @@ object Sequences {
   private def clearLastVal(k: String): Unit =
     lastVal.keySet.removeIf(_.endsWith(SEP + k))
 
+  /** a closed session forgets its currval slots */
+  def endScope(scope: String): Unit =
+    lastVal.keySet.removeIf(_.startsWith(scope + SEP))
+  private[graft] def lastValSlots: Int = lastVal.size
+
   def next(name: String): Long = next(name, callerScope())
 
   def next(name: String, scope: String): Long = {

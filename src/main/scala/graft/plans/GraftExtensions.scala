@@ -503,14 +503,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** ParserInterface wrapper applying [[SqlRewrites]] before delegating
   * to the stock SparkSqlParser (SURVEY §7 M4 — "idiomatic: custom
-  * ParserInterface delegating to SparkSqlParser").
+  * ParserInterface delegating to SparkSqlParser"). `parsePlan` is the
+  * one place a statement is lowered from DuckDB SQL, whichever way it
+  * arrives (wire, `Engine.query`, library `spark.sql`).
   */
 class GraftParser(delegate: ParserInterface) extends ParserInterface {
   import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
   import org.apache.spark.sql.catalyst.plans.logical.{Distinct, SubqueryAlias, Union}
 
-  override def parsePlan(sqlText: String): LogicalPlan =
-    renameInlineDefaults(planByName(SqlRewrites.rewrite(sqlText)))
+  override def parsePlan(sqlText: String): LogicalPlan = {
+    DuckAliases.bumpTxid() // one "transaction" per statement
+    renameInlineDefaults(planByName(SqlRewrites.rewriteFull(sqlText)))
+  }
 
   /** DuckDB numbers anonymous VALUES columns col0, col1, … — Spark
     * starts at col1 (probed: `SELECT col0 FROM (VALUES (1),(2)) v`).
@@ -582,8 +586,10 @@ class GraftParser(delegate: ParserInterface) extends ParserInterface {
           holders(r.multipartIdentifier.head))
     }
   }
+  /** Spark's one caller re-reads a stored view's body, which is text
+    * `parsePlan` already lowered: it parses as it is. */
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(SqlRewrites.rewrite(sqlText))
+    delegate.parseQuery(sqlText)
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =

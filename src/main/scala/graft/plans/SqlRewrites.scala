@@ -16,9 +16,6 @@ package graft
   */
 object SqlRewrites {
 
-  /** Columns the caller must drop from the final DataFrame. */
-  final case class Rewritten(sql: String, dropCols: Seq[String])
-
   /** `FROM generate_series(a, b [, step])` (DuckDB/pg table function;
     * reference README.md:54, client/go/cmd/simple/main.go:27 —
     * inclusive bounds) → lateral explode of Spark's `sequence`.
@@ -29,9 +26,10 @@ object SqlRewrites {
   /** CTE materialization hints — Spark picks its own strategy */
   private val cteMaterialized =
     """(?i)\bAS\s+(?:NOT\s+)?MATERIALIZED\s*\(""".r
-  /** the GLOB keyword operator ≡ `~~~` (whose rewrite already lowers
-    * to duck_glob); the file-listing TVF `FROM glob(...)` is guarded
-    * by the no-following-paren lookahead + from/join lookbehinds */
+  /** the GLOB keyword operator ≡ `~~~`, respelled before the operator
+    * pass lowers that to duck_glob; the file-listing TVF `FROM
+    * glob(...)` is guarded by the no-following-paren lookahead +
+    * from/join lookbehinds */
   private val globKeyword =
     """(?i)(?<!\bfrom\s)(?<!\bjoin\s)\bGLOB\b(?!\s*\()""".r
   /** `x::UUID` / `CAST(x AS UUID)` — Spark has no UUID type; lowered
@@ -333,12 +331,8 @@ object SqlRewrites {
     * round-tripping it through the full statement pass — recorded
     * CHECK / generated-column expressions are evaluated later via
     * Spark's own `expr`, which speaks only the stock dialect. */
-  def rewriteExprText(e: String): String = {
-    val r = rewriteFull(s"SELECT ($e)")
-    require(r.dropCols.isEmpty,
-      s"constraint expression rewrite grew helper columns: $e")
-    r.sql.trim.replaceFirst("(?is)\\ASELECT\\s*", "")
-  }
+  def rewriteExprText(e: String): String =
+    rewriteFull(s"SELECT ($e)").trim.replaceFirst("(?is)\\ASELECT\\s*", "")
 
   private val genColFullRe =
     ("""(?is)^\s*("?[\w]+"?)(?:\s+((?!GENERATED\b)[A-Za-z_]\w*""" +
@@ -426,18 +420,11 @@ object SqlRewrites {
     * order (monotonically_increasing_id — Spark's notion of scan
     * order). Output row ORDER is not guaranteed (standard SQL
     * posture; DuckDB preserves it — ORDER BY for determinism). The
-    * helper columns ride the dropCols channel. One per statement;
-    * chains error loudly rather than mis-scope.
+    * helper columns are hidden from the select list's stars
+    * ([[hideHelpers]]). One per statement; chains error loudly rather
+    * than mis-scope.
     */
   private val positionalJoinRe = """(?i)\bPOSITIONAL\s+JOIN\b""".r
-
-  private def kwAt(sql: String, i: Int, kw: String): Boolean =
-    sql.regionMatches(true, i, kw, 0, kw.length) &&
-      (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1)) &&
-        sql.charAt(i - 1) != '_') &&
-      (i + kw.length >= sql.length ||
-        !Character.isLetterOrDigit(sql.charAt(i + kw.length)) &&
-        sql.charAt(i + kw.length) != '_')
 
   def rewritePositionalJoin(sql: String): String = {
     val ms = positionalJoinRe.findAllMatchIn(sql).toList
@@ -492,7 +479,48 @@ object SqlRewrites {
         s"monotonically_increasing_id()) AS $col FROM $rel) $alias"
     val repl = side(left, "__pjl", "__pjlt") + " FULL JOIN " +
       side(right, "__pjr", "__pjrt") + " ON __pjlt.__pjl = __pjrt.__pjr"
-    sql.substring(0, lStart) + " " + repl + " " + sql.substring(rEnd)
+    hideHelpers(sql.substring(0, lStart) + " " + repl + " " +
+      sql.substring(rEnd), lStart, Seq("__pjlt" -> "__pjl", "__pjrt" -> "__pjr"))
+  }
+
+  /** Keep a join rewrite's helper columns, each `(qualifier, name)`,
+    * out of every output. They can surface only through a star in the
+    * select list of the query block whose FROM clause holds `at`: a
+    * `*` gets `EXCEPT (q.name, …)`, a `q.*` gets `EXCEPT (name)`, and
+    * an EXCEPT/EXCLUDE list already there grows. */
+  private def hideHelpers(sql: String, at: Int,
+      helpers: Seq[(String, String)]): String = {
+    // that block's SELECT: back from `at` at paren depth 0
+    val spans = quotedSpans(sql)
+    var i = at - 1; var depth = 0; var sel = -1
+    while (i >= 0 && sel < 0) {
+      spans.find(sp => i >= sp._1 && i < sp._2) match {
+        case Some((st, _)) => i = st
+        case None => sql.charAt(i) match {
+          case ')' => depth += 1
+          case '(' => if (depth == 0) i = 0 else depth -= 1
+          case _ => if (depth == 0 && kwAt(sql, i, "SELECT")) sel = i
+        }
+      }
+      i -= 1
+    }
+    val from = sel + "SELECT".length
+    val until = (if (sel < 0) None
+      else findTopLevelKeyword(sql, from, Seq("FROM"))).filter(_ < at)
+      .getOrElse(return sql)
+    val list = sql.substring(from, until)
+    val quals = helpers.map(h => java.util.regex.Pattern.quote(h._1)).mkString("|")
+    val star = ("""(?is)(?:^|,)\s*(?:DISTINCT\s+ON\s*\([^()]*\)\s*|""" +
+      """(?:DISTINCT|ALL)\s+)?(?:(""" + quals +
+      """)\s*\.\s*)?\*(\s*(?:EXCEPT|EXCLUDE)\s*\()?""").r
+    sql.substring(0, from) + replaceOutsideQuotes(star, list) { m =>
+      val names = Option(m.group(1)).fold(helpers.map(h => s"${h._1}.${h._2}"))(
+        q => helpers.filter(_._1.equalsIgnoreCase(q)).map(_._2))
+      val pre = list.substring(0, m.start)
+      if (pre.count(_ == '(') != pre.count(_ == ')')) m.matched
+      else if (m.group(2) == null) m.matched + s" EXCEPT (${names.mkString(", ")})"
+      else m.matched + names.mkString("", ", ", ", ")
+    } + sql.substring(until)
   }
 
   /** `COLUMNS(c -> predicate)` — the name-filtering lambda form.
@@ -843,10 +871,6 @@ object SqlRewrites {
     * semantics under the default parser. Quoted identifiers, comments
     * and bare SQL are untouched.
     */
-  /** head comment marking a statement whose literals already went
-    * through the (non-idempotent) backslash-doubling seam */
-  private val seamMarker = "/*G:lit*/"
-
   private def escapeBackslashesInLiterals(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     var last = 0
@@ -1369,44 +1393,24 @@ object SqlRewrites {
 
   /** SQL identifier characters — keyword boundary checks must treat
     * `_` as a word char or identifiers like `__qualify` read as the
-    * QUALIFY keyword on a second (idempotent) rewrite pass.
+    * QUALIFY keyword.
     */
   private def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
 
-  /** top-level QUALIFY clause (not inside parens — checked by paren
-    * depth scan), with optional trailing ORDER BY / LIMIT kept outside.
-    */
-  private def findTopLevelQualify(sql: String): Option[Int] = {
-    var depth = 0; var inS = false; var i = 0
-    val upper = sql.toUpperCase
-    while (i < sql.length) {
-      val c = sql(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'Q' | 'q' if depth == 0 &&
-            upper.startsWith("QUALIFY", i) &&
-            (i == 0 || !isWordChar(sql(i - 1))) &&
-            (i + 7 >= sql.length || !isWordChar(sql(i + 7))) =>
-          return Some(i)
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
+  /** the keyword `kw` (any case, word-bounded) starts at `i` */
+  private def kwAt(sql: String, i: Int, kw: String): Boolean =
+    sql.regionMatches(true, i, kw, 0, kw.length) &&
+      (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
+      (i + kw.length >= sql.length || !isWordChar(sql.charAt(i + kw.length)))
 
   /** index of the first top-level (paren-depth 0, outside strings)
-    * occurrence of any of `kws` (uppercase, word-boundary-checked),
+    * occurrence of any of `kws` (any case, word-bounded),
     * scanning from `start`.
     */
   private def findTopLevelKeyword(s: String, start: Int,
       kws: Seq[String]): Option[Int] = {
     var depth = 0; var inS = false; var i = start
-    val upper = s.toUpperCase
     while (i < s.length) {
       val c = s(i)
       if (inS) { if (c == '\'') inS = false }
@@ -1414,11 +1418,7 @@ object SqlRewrites {
         case '\'' => inS = true
         case '(' => depth += 1
         case ')' => depth -= 1
-        case _ if depth == 0 && kws.exists(k =>
-            upper.startsWith(k, i) &&
-            (i == 0 || !isWordChar(s(i - 1))) &&
-            (i + k.length >= s.length || !isWordChar(s(i + k.length)))) =>
-          return Some(i)
+        case _ if depth == 0 && kws.exists(kwAt(s, i, _)) => return Some(i)
         case _ =>
       }
       i += 1
@@ -1723,13 +1723,8 @@ object SqlRewrites {
       .getOrElse(return None)
     var j = selPos + "SELECT".length
     while (j < before.length && before(j).isWhitespace) j += 1
-    val upper = before.toUpperCase
-    var distinct = false
-    if (upper.startsWith("DISTINCT", j) &&
-        (j + 8 >= before.length || !isWordChar(before(j + 8)))) {
-      distinct = true; j += 8
-    } else if (upper.startsWith("ALL", j) &&
-        (j + 3 >= before.length || !isWordChar(before(j + 3)))) j += 3
+    val distinct = kwAt(before, j, "DISTINCT")
+    if (distinct) j += 8 else if (kwAt(before, j, "ALL")) j += 3
     val fromPos = findTopLevelKeyword(before, j, Seq("FROM"))
       .getOrElse(return None)
     // DISTINCT moves to the outer select: it must deduplicate the
@@ -1882,7 +1877,8 @@ object SqlRewrites {
             // hash-join plannable, no correlated subquery, exactly
             // one B row per matching left row (ties collapse into
             // empty intervals). Backward (L >= B.ts) uses lead();
-            // forward (L <= B.ts) uses lag().
+            // forward (L <= B.ts) uses lag(). The successor column
+            // stays out of the select list's stars.
             val backward = op.startsWith(">")
             val nbFn = if (backward) "lead" else "lag"
             val invOp = op match {
@@ -1899,7 +1895,9 @@ object SqlRewrites {
             val joined = s"${leftKw}JOIN $inner AS $alias ON $cond " +
               s"AND ($lExpr $invOp $alias.__asof_nb " +
               s"OR $alias.__asof_nb IS NULL)"
-            rewriteAsofJoin(sql.substring(0, m.start) + joined + " " + tail)
+            rewriteAsofJoin(hideHelpers(
+              sql.substring(0, m.start) + joined + " " + tail, m.start,
+              Seq(alias -> "__asof_nb")))
           case None => sql // not an ASOF shape we can translate
         }
     }
@@ -1910,7 +1908,6 @@ object SqlRewrites {
     var start = 0
     var i = 0
     var depth = 0; var inS = false
-    val upper = s.toUpperCase
     while (i < s.length) {
       val c = s(i)
       if (inS) { if (c == '\'') inS = false }
@@ -1918,9 +1915,7 @@ object SqlRewrites {
         case '\'' => inS = true
         case '(' => depth += 1
         case ')' => depth -= 1
-        case 'A' | 'a' if depth == 0 && upper.startsWith("AND", i) &&
-            (i == 0 || !isWordChar(s(i - 1))) &&
-            (i + 3 >= s.length || !isWordChar(s(i + 3))) =>
+        case 'A' | 'a' if depth == 0 && kwAt(s, i, "AND") =>
           out += s.substring(start, i).trim
           start = i + 3
           i += 2
@@ -2115,41 +2110,32 @@ object SqlRewrites {
       else q(m.matched))
   }
 
-  def rewriteFull(sqlIn: String): Rewritten = {
-    DuckAliases.bumpTxid() // one "transaction" per parsed statement
-    // Cheap pre-scan gates: this pre-pass runs on EVERY statement the
-    // parser sees (GraftParser seam), and most statements trigger no
-    // rewrite — an indexOf is ~100× cheaper than a full regex pass, so
-    // each pass first checks for its trigger substring. Semantics are
-    // unchanged: a pattern can only match if its literal anchor occurs.
-    // string-literal seam FIRST: DuckDB's E'...' escape-strings decode
-    // to plain literals, then backslashes inside '...' spans double so
-    // Spark's default parser (which escape-processes them) delivers
-    // DuckDB's standard-conforming semantics. The "e'" gate costs one
-    // substring check; a false hit (…name = 'Pete') scans once and
-    // emits the text unchanged. Backslash-doubling is the one rewrite
-    // here that is NOT idempotent, and rewriteFull runs at least twice
-    // per statement (Engine.query pre-pass + the GraftParser seam; a
-    // stored VIEW's text re-parses arbitrarily later) — so any
-    // statement the doubling changes gets a marker comment that makes
-    // every later pass skip the seam. The marker stays in the text on
-    // purpose: that is what carries the "already processed" bit into
-    // catalog-stored SQL.
-    val alreadySeamed = sqlIn.startsWith(seamMarker)
+  /** DuckDB SQL → Spark SQL. Runs once per statement, in
+    * [[GraftParser.parsePlan]]: its output is what Spark parses, and
+    * what a stored view keeps as its text. */
+  def rewriteFull(sqlIn: String): String = {
+    // Cheap pre-scan gates: most statements trigger no rewrite — an
+    // indexOf is ~100× cheaper than a full regex pass, so each pass
+    // first checks for its trigger substring. Semantics are unchanged:
+    // a pattern can only match if its literal anchor occurs.
     // dollar-quoted strings FIRST (later passes tokenize only '...'),
     // then the FROM-first short form (cheap startsWith gates both)
-    val sqlDq0 = if (!alreadySeamed && sqlIn.indexOf('$') >= 0)
+    val sqlDq0 = if (sqlIn.indexOf('$') >= 0)
       rewriteDollarQuotes(sqlIn) else sqlIn
     val sqlDq = if (sqlDq0.length >= 5 &&
         sqlDq0.trim.regionMatches(true, 0, "from", 0, 4))
       rewriteFromFirst(sqlDq0) else sqlDq0
-    val sqlEsc0 = if (!alreadySeamed && sqlDq.indexOf('\'') >= 0 &&
+    // string-literal seam: DuckDB's E'...' escape-strings decode to
+    // plain literals, then backslashes inside '...' spans double so
+    // Spark's default parser (which escape-processes them) delivers
+    // DuckDB's standard-conforming semantics. The "e'" gate costs one
+    // substring check; a false hit (…name = 'Pete') scans once and
+    // emits the text unchanged.
+    val sqlEsc0 = if (sqlDq.indexOf('\'') >= 0 &&
         (sqlDq.contains("E'") || sqlDq.contains("e'")))
       rewriteEStrings(sqlDq) else sqlDq
-    val sqlEsc1 = if (!alreadySeamed && sqlEsc0.indexOf('\\') >= 0)
+    val sqlEsc = if (sqlEsc0.indexOf('\\') >= 0)
       escapeBackslashesInLiterals(sqlEsc0) else sqlEsc0
-    val sqlEsc = if ((sqlEsc1 ne sqlEsc0) && sqlEsc1 != sqlEsc0)
-      seamMarker + sqlEsc1 else sqlEsc1
     // numeric digit separators (1_000_000) — token-start guarded so
     // identifiers like col1_2 stay
     val sqlNu = if (sqlEsc.indexOf('_') < 0) sqlEsc
@@ -2218,8 +2204,10 @@ object SqlRewrites {
     // DuckDB operator spellings: `//` int-div, `**`/`^` power (Spark's
     // `^` is XOR — must not reach the stock parser), the ~/~~/~~~
     // match family, ^@, @, postfix !, and the list ops <@ @> && <-> <=>
-    val sqlO = if (BracketRewrite.hasOperatorTrigger(sqlBr))
-      BracketRewrite.rewriteOperators(sqlBr) else sqlBr
+    val sqlG = if (lowIn.contains("glob"))
+      replaceOutsideQuotes(globKeyword, sqlBr)(_ => "~~~") else sqlBr
+    val sqlO = if (BracketRewrite.hasOperatorTrigger(sqlG))
+      BracketRewrite.rewriteOperators(sqlG) else sqlG
     val sqlB = if (sqlO.indexOf('[') >= 0) BracketRewrite.rewrite(sqlO) else sqlO
     // `x AT TIME ZONE 'z'` (pg/DuckDB postfix operator) — runs BEFORE
     // the typedLit collapse so the literal's TIMESTAMPTZ spelling can
@@ -2333,11 +2321,7 @@ object SqlRewrites {
     val sr0 = if (has("temp")) rewriteCreateTemp(sqlCl) else sqlCl
     val sr = if (has("replace")) rewriteStarReplace(sr0) else sr0
     val s0a = if (has("asof")) rewriteAsofJoin(sr) else sr
-    // the ASOF interval rewrite adds a helper column that `SELECT *`
-    // would otherwise surface
-    val asofDrop = if (s0a != sr) Seq("__asof_nb") else Nil
     val s0p = if (has("positional")) rewritePositionalJoin(s0a) else s0a
-    val posDrop = if (s0p ne s0a) Seq("__pjl", "__pjr") else Nil
     val s0u = if (has("unnest")) rewriteCommaUnnest(s0p) else s0p
     val s0v = if (has("values") && has("in")) rewriteInValues(s0u) else s0u
     val s0q = if (has("any") || has("all") || has("some"))
@@ -2397,18 +2381,16 @@ object SqlRewrites {
     val s0 = if (has("interval")) rewriteMixedIntervals(s0lp) else s0lp
     val s0m0 = if (has("materialized"))
       replaceOutsideQuotes(cteMaterialized, s0)(_ => "AS (") else s0
-    val s0m1 = if (has("glob"))
-      replaceOutsideQuotes(globKeyword, s0m0)(_ => "~~~") else s0m0
     // plain replaceAllIn (like the enum casts): the operand capture
     // group itself STARTS at a string literal, which the
     // outside-quotes guard would skip
     val s0m = if (has("uuid")) {
       val q = java.util.regex.Matcher.quoteReplacement _
-      val u1 = uuidCastAsRe.replaceAllIn(s0m1, m =>
+      val u1 = uuidCastAsRe.replaceAllIn(s0m0, m =>
         q(s"graft_uuid(${m.group(2)})"))
       uuidPostfixCast.replaceAllIn(u1, m =>
         q(s"graft_uuid(${m.group(1)})"))
-    } else s0m1
+    } else s0m0
     val s1 = if (!has("generate_series")) s0m else
       genSeries.replaceAllIn(s0m, m => {
         val kw = m.group(1)
@@ -2489,10 +2471,8 @@ object SqlRewrites {
         .findFirstIn(s1ts).isDefined
     val s1dd = if (!isCreateTable) s1ts
       else {
-        // NOTE: PK recording happens in Engine.query (single
-        // invocation per user statement) — this pass runs AGAIN at
-        // the parser seam on the already-stripped text, where a
-        // clear-and-re-record would wipe the fresh record
+        // PK recording happens in Engine.query, on the statement
+        // as written: this pass only strips
         val a = replaceOutsideQuotes(tableConstraintRe, s1ts)(_ => "")
         val b = replaceOutsideQuotes(colConstraintRe, a)(_ => "")
         replaceOutsideQuotes(ddlVarcharRe, b)(_ => "STRING")
@@ -2541,8 +2521,9 @@ object SqlRewrites {
     // against s5a itself since earlier passes can generate ORDER BYs
     val s5 = if (!s5a.toLowerCase.contains("order")) s5a
       else pinOrderNullsLast(s5a)
-    (if ((s5 ne s4) || has("qualify")) findTopLevelQualify(s5) else None) match {
-      case None => Rewritten(s5, asofDrop ++ posDrop)
+    (if ((s5 ne s4) || has("qualify"))
+      findTopLevelKeyword(s5, 0, Seq("QUALIFY")) else None) match {
+      case None => s5
       case Some(pos) =>
         val before = s5.substring(0, pos)
         val after = s5.substring(pos + "QUALIFY".length)
@@ -2564,9 +2545,7 @@ object SqlRewrites {
           s"""SELECT * EXCEPT (__qualify) FROM (
              |  SELECT __q.*, ($pred) AS __qualify FROM ($before) __q
              |) WHERE __qualify""".stripMargin)
-        Rewritten(s"$wrapped $tail", asofDrop ++ posDrop)
+        s"$wrapped $tail"
     }
   }
-
-  def rewrite(sql: String): String = rewriteFull(sql).sql
 }

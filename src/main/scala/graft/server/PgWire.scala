@@ -15,6 +15,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object PgWire {
 
+  /** A name the session does not hold: a prepared statement (pg's
+    * SQLSTATE 26000) or a portal (34000). */
+  final class UndefinedName(val sqlState: String, msg: String)
+      extends IllegalArgumentException(msg)
+
   // protocol magic numbers
   val ProtocolV3 = 196608
   val SslRequestCode = 80877103

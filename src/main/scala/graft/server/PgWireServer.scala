@@ -88,6 +88,8 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     val w = new MessageWriter(out)
     val pid = pidCounter.getAndIncrement()
     val secret = secretRng.nextInt()
+    // the connection's job group, and its currval scope
+    val group = s"pgwire-$pid"
     var session: SparkSession = null
     try {
       if (!startup(in, out, w, pid, secret)) return
@@ -97,7 +99,6 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
       onNewSession(session) // e.g. temp-view catalog registration
       // all of this connection's Spark jobs run on this thread → one
       // job group; a CancelRequest with the matching key cancels it
-      val group = s"pgwire-$pid"
       session.sparkContext.setJobGroup(group, s"pgwire connection $pid",
         interruptOnCancel = true)
       // per-connection currval scope (DuckDB semantics): tasks read the
@@ -121,6 +122,7 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
         log.warn(s"pgwire connection $pid failed: ${e.getClass.getName}: ${e.getMessage}")
     } finally {
       if (session != null) Engine.endSession(session)
+      graft.Sequences.endScope(group)
       cancelKeys.remove((pid, secret))
       try sock.close() catch { case NonFatal(_) => }
     }
@@ -286,11 +288,11 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
   }
 
   private def statement(name: String): Prepared =
-    Option(statements.get(name)).getOrElse(throw new IllegalArgumentException(
+    Option(statements.get(name)).getOrElse(throw new UndefinedName("26000",
       s"""prepared statement "$name" does not exist"""))
 
   private def portal(name: String): Portal = portals.getOrElse(name,
-    throw new IllegalArgumentException(s"""portal "$name" does not exist"""))
+    throw new UndefinedName("34000", s"""portal "$name" does not exist"""))
 
   private def bind(msg: FrontendMessage): Unit = {
     val r = msg.reader
@@ -413,12 +415,14 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     case "COMMIT" | "END" => "COMMIT"
     case "ROLLBACK" | "ABORT" => "ROLLBACK"
     case "SET" => "SET"
-    case "CREATE" => "CREATE " + sql.trim.split("\\s+")
-      .drop(1).headOption.getOrElse("").toUpperCase
-    case "DROP" => "DROP " + sql.trim.split("\\s+")
-      .drop(1).headOption.getOrElse("").toUpperCase
+    case verb @ ("CREATE" | "DROP") => verb + " " + sql.trim.split("\\s+")
+      .iterator.drop(1).map(_.toUpperCase).find(!TagModifiers(_)).getOrElse("")
     case other => other
   }
+
+  /** words between CREATE/DROP and the object kind: pg's tag names the
+    * kind (`CREATE OR REPLACE TABLE` answers `CREATE TABLE`) */
+  private val TagModifiers = Set("OR", "REPLACE", "TEMP", "TEMPORARY", "UNIQUE")
 
   private val insertTableRe =
     """(?is)^\s*INSERT\s+(?:OR\s+(?:REPLACE|IGNORE)\s+)?INTO\s+([\w.]+).*""".r
@@ -643,6 +647,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     w.resetPayload() // drop any half-written DataRow payload
     val sqlState = e match {
       case c: CopyIn.Failure => c.sqlState
+      case u: UndefinedName => u.sqlState
       case p: org.apache.spark.sql.catalyst.parser.ParseException => "42601"
       case a: org.apache.spark.sql.AnalysisException =>
         if (a.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND")) "42P01"

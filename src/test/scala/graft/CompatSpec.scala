@@ -42,28 +42,33 @@ class CompatSpec extends SparkSpecBase {
 
   test("star REPLACE / ASOF JOIN / reader TVF rewrites") {
     // * REPLACE keeps the column set, substitutes the expression
-    val r = SqlRewrites.rewrite(
+    val r = SqlRewrites.rewriteFull(
       "SELECT * REPLACE (upper(r_name) AS r_name) FROM region")
     assert(r.contains("* EXCEPT (r_name)") &&
       r.contains("(upper(r_name)) AS r_name"), r)
     // ASOF LEFT JOIN → interval join (lead + range filter), no LATERAL
-    val a = SqlRewrites.rewrite(
+    val a = SqlRewrites.rewriteFull(
       "SELECT e.id, o.ts FROM ev e ASOF LEFT JOIN ord o " +
         "ON e.k = o.k AND e.ts >= o.ts ORDER BY e.id")
     assert(a.contains("LEFT JOIN (SELECT o.*, lead(o.ts) OVER " +
       "(PARTITION BY o.k ORDER BY o.ts NULLS LAST)"), a)
     assert(a.contains("AND (e.ts < o.__asof_nb OR o.__asof_nb IS NULL)"), a)
     // forward ASOF (strict) uses lag with the dual filter
-    val f = SqlRewrites.rewrite(
+    val f = SqlRewrites.rewriteFull(
       "SELECT * FROM ev e ASOF JOIN ord o ON e.k = o.k AND e.ts < o.ts")
     assert(f.contains("lag(o.ts) OVER") && f.contains("e.ts >= o.__asof_nb"), f)
+    // the successor helper stays out of the select list's stars
+    assert(f.startsWith("SELECT * EXCEPT (o.__asof_nb) FROM"), f)
+    val dr = SqlRewrites.rewriteFull("SELECT DISTINCT e.*, o.* EXCLUDE (k) " +
+      "FROM ev e ASOF JOIN ord o ON e.k = o.k AND e.ts >= o.ts")
+    assert(dr.contains("e.*, o.* EXCEPT (__asof_nb, k)"), dr)
     // parenthesized ON clause still splits into key + inequality
-    val par = SqlRewrites.rewrite(
+    val par = SqlRewrites.rewriteFull(
       "SELECT * FROM ev e ASOF JOIN ord o ON (e.k = o.k AND e.ts >= o.ts)")
     assert(par.contains("PARTITION BY o.k") && par.contains("lead(o.ts)"), par)
     // valid Spark SQL without the sugar passes through untouched
     val plain = "SELECT a FROM t JOIN u ON t.k = u.k AND t.x >= u.x"
-    assert(SqlRewrites.rewrite(plain) == plain)
+    assert(SqlRewrites.rewriteFull(plain) == plain)
   }
 
   test("reader TVFs resolve through Engine.query") {
@@ -306,7 +311,26 @@ class CompatSpec extends SparkSpecBase {
       .map(r => (Option(r.getString(0)), Option(r.get(1)))).toSeq
     assert(got == Seq((Some("x"), Some(10)), (Some("y"), Some(20)),
       (Some("z"), None)))
+    // the SQL lowering's row-number helpers reach no view or table
+    val pj = "SELECT * FROM (VALUES (1),(2)) a(x) POSITIONAL JOIN (VALUES (3)) b(y)"
+    assertNoHelpers(Seq("pj_v" -> s"CREATE VIEW pj_v AS $pj",
+      "pj_t" -> s"CREATE TABLE pj_t AS $pj"), Seq("x", "y"), "x",
+      Seq(Seq(1, 3), Seq(2, null)))
   }
+
+  /** each (name, DDL) creates `name` over a lowered join; `SELECT *`
+    * from it shows exactly `cols`, and `rows` ordered by `key` */
+  private def assertNoHelpers(ddl: Seq[(String, String)], cols: Seq[String],
+      key: String, rows: Seq[Seq[Any]]): Unit =
+    for ((name, create) <- ddl) {
+      val kind = if (create.contains(" VIEW ")) "VIEW" else "TABLE"
+      Engine.query(spark, s"DROP $kind IF EXISTS $name")
+      Engine.query(spark, create)
+      val df = Engine.query(spark, s"SELECT * FROM $name ORDER BY $key")
+      assert(df.columns.toSeq == cols, s"$name: ${df.columns.mkString(",")}")
+      assert(df.collect().map(_.toSeq).toSeq == rows, name)
+      Engine.query(spark, s"DROP $kind $name")
+    }
 
   test("CREATE OR REPLACE TABLE drops and recreates (v1 catalog)") {
     Engine.query(spark, "CREATE OR REPLACE TABLE cort AS SELECT 1 AS x")
@@ -330,6 +354,19 @@ class CompatSpec extends SparkSpecBase {
       .orderBy("event_id")
       .collect().map(r => (r.getLong(0), Option(r.getString(3)))).toSeq
     assert(got == Seq((1L, Some("a")), (2L, Some("b")), (3L, None)))
+    // over SQL, the successor helper reaches no view or table
+    Engine.query(spark, "DROP TABLE IF EXISTS asof_tr")
+    Engine.query(spark, "CREATE TABLE asof_tr AS " +
+      "SELECT * FROM (VALUES (90, 'a'), (200, 'b')) v(t, v)")
+    val aj = "SELECT * FROM (VALUES (100), (205), (50)) l(lt) " +
+      "ASOF JOIN asof_tr ON l.lt >= asof_tr.t"
+    val ajr = "SELECT l.*, r.* FROM (VALUES (100), (205), (50)) l(lt) " +
+      "ASOF JOIN asof_tr r ON l.lt >= r.t"
+    assertNoHelpers(Seq("asof_v" -> s"CREATE VIEW asof_v AS $aj",
+      "asof_t" -> s"CREATE TABLE asof_t AS $aj",
+      "asof_vr" -> s"CREATE VIEW asof_vr AS $ajr"), Seq("lt", "t", "v"), "lt",
+      Seq(Seq(100, 90, "a"), Seq(205, 200, "b")))
+    Engine.query(spark, "DROP TABLE asof_tr")
   }
 
   test("PRAGMA version / show_tables / table_info / database_list / CALL") {
@@ -373,7 +410,7 @@ class CompatSpec extends SparkSpecBase {
     assert(Engine.query(spark, "SELECT add1(2) AS s")
       .collect().head.getString(0) == "a=2")
     // qualified name is NOT a macro call
-    assert(SqlRewrites.rewrite("SELECT 1") != null) // engine still sane
+    assert(SqlRewrites.rewriteFull("SELECT 1") != null) // engine still sane
     Engine.query(spark, "DROP MACRO add1")
     Engine.query(spark, "DROP MACRO topn")
     Engine.query(spark, "DROP MACRO hyp")
@@ -1280,12 +1317,12 @@ class CompatSpec extends SparkSpecBase {
     assert(r.getString(4).matches(uuidRe), r.toString)
     assert(r.getLong(5) > 0L, r.toString)
     assert(r.getString(6) == "UTC", r.toString)
-    // txid is stable within a statement, increments across statements
+    // txid is stable within a statement, and each statement takes one
     val t2 = Engine.query(spark,
       "SELECT CAST(txid_current() AS BIGINT) AS a, CAST(txid_current() AS BIGINT) AS b")
       .collect().head
     assert(t2.getLong(0) == t2.getLong(1), t2.toString)
-    assert(t2.getLong(0) > r.getLong(5), s"${t2.getLong(0)} vs ${r.getLong(5)}")
+    assert(t2.getLong(0) == r.getLong(5) + 1, s"${t2.getLong(0)} vs ${r.getLong(5)}")
     // error() raises; unknown setting errors like DuckDB's message
     val err = intercept[Exception] {
       Engine.query(spark, "SELECT error('boom') AS e").collect()

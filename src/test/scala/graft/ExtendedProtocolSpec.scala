@@ -195,6 +195,30 @@ class ExtendedProtocolSpec extends SparkSpecBase {
     assert(Engine.sessionStates <= before)
   }
 
+  test("a missing statement or portal answers pg's SQLSTATE") {
+    withClient { c =>
+      def state(m: Messages) = errorFields(m).get('C')
+      assert(state(c.query("EXECUTE nope(1)")).contains("26000"))
+      c.bind("", "nope")
+      assert(state(c.sync()).contains("26000"))
+      c.describe('S', "nope")
+      assert(state(c.sync()).contains("26000"))
+      c.execute("nope")
+      assert(state(c.sync()).contains("34000"))
+      assert(rows(ok(c.extended("SELECT 5 AS v"))) == Seq(Seq(Some("5"))))
+    }
+  }
+
+  test("a connection's currval slots end with it") {
+    withClient(c => ok(c.query("CREATE SEQUENCE IF NOT EXISTS ep_seq")))
+    val before = Sequences.lastValSlots
+    for (_ <- 1 to 20) withClient(c => ok(c.query("SELECT nextval('ep_seq')")))
+    val deadline = System.nanoTime() + 10000000000L
+    while (Sequences.lastValSlots > before && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(Sequences.lastValSlots <= before)
+    withClient(c => ok(c.query("DROP SEQUENCE ep_seq")))
+  }
+
   test("sessions share one table plan, and each renders events.ts in its own zone") {
     val s1 = spark.newSession()
     val s2 = spark.newSession()

@@ -179,6 +179,25 @@ class PgWireSpec extends SparkSpecBase {
     c.close()
   }
 
+  test("CREATE and DROP tags name the object, not a modifier") {
+    val (_, port) = server
+    val c = new Client(port)
+    c.startup()
+    def tagOf(sql: String): String = {
+      val (_, _, tags, errs) = c.query(sql)
+      assert(errs.isEmpty, errs); tags.head
+    }
+    c.query("DROP TABLE IF EXISTS tag_t")
+    assert(tagOf("CREATE OR REPLACE TABLE tag_t AS SELECT 1 AS a") == "CREATE TABLE")
+    assert(tagOf("CREATE TEMP TABLE tag_tt (a INT)") == "CREATE TABLE")
+    assert(tagOf("CREATE TEMPORARY VIEW tag_v AS SELECT 1 AS a") == "CREATE VIEW")
+    assert(tagOf("CREATE INDEX tag_i ON tag_t (a)") == "CREATE INDEX")
+    assert(tagOf("DROP INDEX tag_i") == "DROP INDEX")
+    assert(tagOf("DROP VIEW tag_v") == "DROP VIEW")
+    assert(tagOf("DROP TABLE tag_t") == "DROP TABLE")
+    c.close()
+  }
+
   test("DML RETURNING ships a row set plus the pg command tag") {
     val (_, port) = server
     val c = new Client(port)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.Row
 
+import graft.server.PgWireServer
+
 /** DuckDB string-literal semantics at the rewrite seam (SqlRewrites
   * escapeBackslashesInLiterals + rewriteEStrings). All values probed
   * on DuckDB v1.0: '...' is standard-conforming (backslash is DATA),
@@ -45,5 +47,26 @@ class StringLiteralSpec extends SparkSpecBase {
       "2024-03-15")
     // and an E-string inside a comment stays text
     assert(one("SELECT 1 v -- E'\\n'").getInt(0) == 1)
+  }
+
+  test("a stored view reads its literals back as written") {
+    // the view keeps the lowered text; reading it lowers nothing again
+    def check(read: String => Seq[Option[String]], v: String): Unit = {
+      read(s"DROP VIEW IF EXISTS $v")
+      read(s"CREATE VIEW $v AS SELECT 'a\\b' AS s, E'a\\\\b' AS e, 'x\\y' AS s2")
+      assert(read(s"SELECT s, length(s), e, s2 FROM $v") ==
+        Seq(Some("a\\b"), Some("3"), Some("a\\b"), Some("x\\y")))
+      read(s"DROP VIEW $v")
+    }
+    check(sql => Engine.query(spark, sql).collect().headOption.toSeq
+      .flatMap(_.toSeq.map(v => Option(v).map(_.toString))), "slv_lib")
+    val server = new PgWireServer(spark, port = 0)
+    val c = new WireClient(server.start())
+    try check(sql => {
+      val m = c.query(sql)
+      assert(WireClient.errorFields(m).isEmpty, WireClient.errorFields(m))
+      WireClient.rows(m).headOption.toSeq.flatten
+    }, "slv_wire")
+    finally { c.close(); server.stop() }
   }
 }
