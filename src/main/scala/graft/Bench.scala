@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR four times — a full untimed-in-spirit "cold"
   * pass (reported as cold_total) that warms the JVM, parquet footers
@@ -37,18 +35,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Engine.cpusFromEnv(
-      math.min(32, Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // TVFs + parser + functions
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // Tables.load
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(Engine.localCores)
     // ERROR, not WARN: at 196 queries × 4 passes the localCheckpoint
     // lifecycle WARNs ("RDD ... was locally checkpointed") run to
     // thousands of lines and push the single JSON result line out of
@@ -68,22 +55,9 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
         val t = (System.nanoTime() - t0) / 1e9
-        // localCheckpoint()ed RDDs stay pinned in the block manager for
-        // the session's lifetime; 138 queries × 2 passes of the
-        // checkpoint-heavy dedup/pipeline family pile up gigabytes and
-        // the eviction/GC pressure taxes every LATER query (measured:
-        // ~35% on the dedup family at sf0.1). Each bench query is a
-        // standalone workload — drop retained blocks between queries,
-        // outside the timed window. clearCache() FIRST (r12): the
-        // scale-path frames now persist() through the SQL CacheManager,
-        // and unpersisting only the underlying RDDs leaves stale cache
-        // entries that poison later queries (measured at sf10:
-        // q_pipeline_full warm 77 s vs cold 10 s until this line) —
-        // clearCache drops entry + blocks; the RDD sweep then covers
-        // localCheckpoints, which live outside the CacheManager.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+        // each bench query is a standalone workload: drop the blocks it
+        // retained, outside the timed window (see Engine.releaseCache)
+        Engine.releaseCache(spark)
         name -> t
       }
       (times, failed.toSet)

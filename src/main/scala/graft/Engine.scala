@@ -17,22 +17,24 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   */
 object Engine {
 
-  /** Local cores from `$SPARK_GRAFT_CPUS`, or `default` when unset;
-    * fails fast on anything but a positive integer, which would
-    * otherwise become a bad master URL or malformed bench JSON. */
-  def cpusFromEnv(default: => Int): Int =
+  /** Local cores for every main but the server: `$SPARK_GRAFT_CPUS`,
+    * else the JVM's available processors; fails fast on anything but a
+    * positive integer, which would otherwise become a bad master URL or
+    * malformed bench JSON. */
+  def localCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS") match {
-      case None => default
+      case None => Runtime.getRuntime.availableProcessors()
       case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
           s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
     }
 
-  /** Build (or reuse) the shared session. Idempotent. */
-  def session(master: String = "local[32]"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
+  /** Build (or reuse) the shared session on `local[cores]` — the one
+    * session builder: the server, Verify, Bench, SpecGates, the dev
+    * tools and the test suite all run this configuration. Idempotent. */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
       .appName("graft-engine")
       .withExtensions(new GraftExtensions) // TVFs + parser + functions
       .config("spark.sql.shuffle.partitions", "32")
@@ -49,8 +51,7 @@ object Engine {
       // against a 2 GB/task memory slice. Measured r11: q_dedup_prefix
       // sf30 warm 513 s → (see SCALE_CURVE_r11) with this line; the
       // 100 TB posture is the same mechanism at cluster scale.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("GRAFT_INIT_PARTITIONS", "1024"))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
       // DuckDB's TIME / TIMETZ surface needs Spark 4.1's TimeType
       // (collection-side encoder support is gated behind this flag)
       .config("spark.sql.timeType.enabled", "true")
@@ -60,6 +61,9 @@ object Engine {
       // never string literals — Spark's default reads them as strings,
       // a silent wrong-answer for every quoting wire client
       .config("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+      // DuckDB's map_concat keeps the LAST value for a duplicate key
+      // (probed); Spark's default policy is EXCEPTION
+      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       // NOTE on string literals: DuckDB (like pg with
       // standard_conforming_strings) keeps backslashes in '...'
       // literals LITERAL. Spark's default parser escape-processes
@@ -86,6 +90,22 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     Functions.registerAll(spark)
     spark
+  }
+
+  /** Drop every cached block between two standalone workloads: first
+    * the SQL CacheManager's entries, then the persistent-RDD sweep. The
+    * order matters: the scale-path frames persist() through the
+    * CacheManager, and unpersisting only their RDDs leaves stale cache
+    * entries that poison later queries (measured at sf10:
+    * q_pipeline_full warm 77 s vs cold 10 s). clearCache drops entry
+    * and blocks; the sweep then covers localCheckpoint()ed RDDs, which
+    * live outside the CacheManager and otherwise stay pinned for the
+    * session's lifetime (their eviction/GC pressure taxed every later
+    * query by ~35% on the dedup family at sf0.1). */
+  def releaseCache(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Run one SQL statement through the compat layer (pg-dialect sugar

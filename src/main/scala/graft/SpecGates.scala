@@ -36,9 +36,7 @@ object SpecGates {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "SPECGATES.json"
-    val spark = Engine.session("local[32]")
-    def unpersist(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    val spark = Engine.session(Engine.localCores)
 
     val docs = Tables.load(spark, sfDir, "documents")
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -71,7 +69,7 @@ object SpecGates {
       numClusters = 16, nprobe = 14, kmeansIters = 2))
     gates += Gate("q_ann_ivf_quantized", "recall_at_3",
       qivf.intersect(exactAnn).size.toDouble / exactAnn.size, ">=", 0.95)
-    unpersist()
+    Engine.releaseCache(spark)
 
     // ANN-fed hybrid RRF overlaps the exact hybrid's top-k
     // (GraphRankingSpec "ANN-fed hybrid RRF" bound)
@@ -91,7 +89,7 @@ object SpecGates {
         ivfHybrid.intersect(exactHybrid).size.toDouble / exactHybrid.size,
         ">=", 0.6)
     }
-    unpersist()
+    Engine.releaseCache(spark)
 
     // MinHash LSH vs the ORACLE-BACKED exact ngram operator (DedupSpec)
     val exactPairs = Dedup.ngramJaccardPairs(
@@ -109,7 +107,7 @@ object SpecGates {
     gates += Gate("q_dedup_minhash", "precision",
       if (mh.isEmpty) 1.0
       else mh.intersect(exactPairs).size.toDouble / mh.size, ">=", 1.0)
-    unpersist()
+    Engine.releaseCache(spark)
 
     // Banded embedding near-dup recovers engineered near-copies
     // (cos ≈ 0.93 noised twins (0.05/dim on unit vectors)) — the quantified-recall contract of
@@ -153,7 +151,7 @@ object SpecGates {
       gates += Gate("q_dedup_embedding_inc", "noised_twin_recall",
         hit.toDouble / base.length, ">=", 0.9)
     }
-    unpersist()
+    Engine.releaseCache(spark)
 
     // SimHash pigeonhole: byte-identical copies MUST pair (DedupSpec)
     val base = docs.limit(50)
@@ -168,7 +166,7 @@ object SpecGates {
       .map(r => (r.getLong(0), r.getLong(0) + 1000000L)).toSet
     gates += Gate("q_dedup_simhash", "exact_copy_recall",
       shExpected.intersect(shPairs).size.toDouble / shExpected.size, "==", 1.0)
-    unpersist()
+    Engine.releaseCache(spark)
 
     // Bloom decontamination is one-sided: zero false negatives vs the
     // exact report, over-flagging bounded (CorpusOpsSpec)
@@ -185,7 +183,7 @@ object SpecGates {
     gates += Gate("q_decontaminate_bloom", "overflag_ratio",
       if (exactContam.isEmpty) 1.0
       else bloom.size.toDouble / exactContam.size, "<=", 2.0)
-    unpersist()
+    Engine.releaseCache(spark)
 
     // Bernoulli sample: realized fraction near the 10% target. At
     // sf0.01 (~60k rows) the binomial sd is ~0.12%, so ±2% is a >10σ

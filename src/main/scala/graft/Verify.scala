@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,17 +16,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional dev-loop filter: run named queries only
-    val cpus = Engine.cpusFromEnv(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // TVFs + parser + functions
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // Tables.load
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(Engine.localCores)
     new java.io.File(outDir).mkdirs()
     // oracleSql is a def that concatenates many maps — build it once
     val oracle = SparkEntry.oracleSql
@@ -62,10 +51,7 @@ object Verify {
           c = c.getCause
         }
       }
-      // drop this query's localCheckpoint blocks before the next one
-      // (same block-manager-pressure reasoning as Bench)
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Engine.releaseCache(spark) // each query is a standalone workload
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, DoubleType, IntegerType, LongType, MapType, ShortType, StringType, TimestampType}
@@ -27,14 +28,20 @@ object DuckAliases {
     val reg = spark.sessionState.functionRegistry
     def alias(name: String)(b: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, b, "built-in")
-    // DuckDB's map_concat keeps the LAST value for a duplicate key
-    // (probed); Spark's default policy is EXCEPTION
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    // a polymorphic wrapper names an unaliased column after the
+    // function the user called (`length(s)`, as DuckDB does), not after
+    // its case class: Expression.prettyName reads this tag
+    def named(name: String)(b: Expression => Expression): Unit =
+      alias(name) { e =>
+        val x = b(e.head)
+        x.setTagValue(FunctionRegistry.FUNC_ALIAS, name)
+        x
+      }
 
-    alias("len")(e => LenPoly(e.head))
+    named("len")(LenPoly(_))
     // DuckDB's length is polymorphic too: list/map length, else chars
-    alias("length")(e => LenPoly(e.head))
-    alias("reverse")(e => ReversePoly(e.head))
+    named("length")(LenPoly(_))
+    named("reverse")(ReversePoly(_))
     alias("list_distinct")(e => ArrayDistinct(e.head))
     // SELECT-position unnest (row-exploding projection; FROM-position
     // is the injected TVF) — full DuckDB surface incl. unnest(struct)
@@ -782,7 +789,7 @@ object DuckAliases {
     // value-or-NULL); element_at is map-only in DuckDB ("MAP_EXTRACT
     // can only operate on MAPs") but the array form stays as a Spark
     // superset. Duplicate keys in map_concat: LAST value wins
-    // (session conf mapKeyDedupPolicy=LAST_WIN, set at registration).
+    // (session conf mapKeyDedupPolicy=LAST_WIN, set by Engine.session).
     // map_keys/map_values/map_entries/map_from_entries/cardinality
     // are the Spark natives (names and shapes already agree). ----
     alias("map") {

@@ -376,7 +376,7 @@ object Dedup {
     // SHUFFLE_HASH on the gram-array side of both verify joins (r12):
     // the stream side of join 2 is (pair, ga) — O(candidates × array
     // bytes), the dominant flow of the whole operator (~450 B × pairs;
-    // StageProbe measured it as the sf100 disk killer) — and sort-merge
+    // `Probe stages` measured it as the sf100 disk killer) — and sort-merge
     // would EXTERNAL-SORT that stream, doubling its disk footprint.
     // Hash-building the bounded g side (per-partition corpus shard,
     // the memory-safe side at any scale) streams the heavy side

@@ -93,10 +93,10 @@ object Ranking {
     // its shape for the stats aggregate.
     //
     // Caching lifecycle: the returned base frame is persisted for the
-    // duration of the query; Bench/ScaleBench clear the SQL cache
-    // between queries. Library callers running many independent
+    // duration of the query; Bench and the Probe tool clear the SQL
+    // cache between queries. Library callers running many independent
     // ranking workloads in one session should likewise call
-    // spark.sharedState.cacheManager.clearCache() between them (the
+    // Engine.releaseCache(spark) between them (the
     // operators return lazy frames, so there is no terminal action
     // here after which an unpersist would be safe).
     val base = docs

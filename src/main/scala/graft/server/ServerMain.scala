@@ -15,7 +15,9 @@ object ServerMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(15432)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = Engine.session()
+    // sized at 32 cores, not from the box: the configuration the wire
+    // benchmark measures and stamps (default parallelism 32)
+    val spark = Engine.session(32)
     Tables.registerAll(spark, sfDir)
     // temp views are per-session; re-register on each connection clone
     val server = new PgWireServer(spark, port, Tables.registerAll(_, sfDir))

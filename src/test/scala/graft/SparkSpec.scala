@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Functions.registerAll, which is idempotent).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = Engine.session("local[4]")
+  lazy val spark: SparkSession = Engine.session(4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

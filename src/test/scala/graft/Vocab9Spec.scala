@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 
 /** Round-9 conformance-wave value pins. Every expected value below was
   * probed on DuckDB v1.0 (see DuckVocab9 / GraftCall scaladoc); the
-  * whole duckdb_functions() corpus replays via tools/ProbeSql +
+  * whole duckdb_functions() corpus replays via `graft.tools.Probe sql` +
   * tools/conformance_corpus.tsv (466/466 OK as of r9).
   */
 class Vocab9Spec extends SparkSpecBase {

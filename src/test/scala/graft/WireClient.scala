@@ -100,6 +100,16 @@ object WireClient {
         .map(f => f.head -> f.tail).toMap
     }.getOrElse(Map.empty)
 
+  /** column names of the first RowDescription */
+  def columns(m: Messages): Seq[String] = m.collectFirst { case ('T', p) =>
+    val r = new graft.server.PgWire.PayloadReader(p)
+    (0 until r.int16()).map { _ =>
+      val name = r.cstr()
+      r.int32(); r.int16(); r.int32(); r.int16(); r.int32(); r.int16()
+      name
+    }
+  }.getOrElse(Nil)
+
   /** text-format DataRow values */
   def rows(m: Messages): Seq[Seq[Option[String]]] = m.collect { case ('D', p) =>
     val b = java.nio.ByteBuffer.wrap(p)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """VALUE-compare the conformance corpus: DuckDB's own answer vs the
-graft engine's (ProbeSql output with JSON-rendered rows).
+graft engine's (`Probe sql` output with JSON-rendered rows).
 
 Usage:
+  tools/run_main.sh graft.tools.Probe sql <corpus.tsv> <probe_out.tsv>
   python3 tools/check_conformance.py <corpus.tsv> <probe_out.tsv> [out.json]
 
 Classification per row:
@@ -11,7 +12,7 @@ Classification per row:
              or it is a bug to fix)
   EXEC_ONLY  value not comparable (nondeterministic, engine-specific by
              contract, or rendered in a type JSON cannot carry)
-  FAIL       the engine failed to execute (ProbeSql FAIL row)
+  FAIL       the engine failed to execute (`Probe sql` FAIL row)
 
 Dev tool only (driver-side python; duckdb is the oracle).
 """

@@ -4,8 +4,10 @@
 For every scalar/aggregate/macro function in duckdb_functions(), synthesize a
 call from its declared parameter types, keep the first overload DuckDB itself
 evaluates successfully, and emit TSV lines `name<TAB>kind<TAB>sql` to stdout.
-The Scala side (graft.tools.ProbeSql) replays each statement through
-Engine.query to measure true end-to-end parity (registry + rewrites + TVFs).
+The Scala side replays each statement through Engine.query to measure true
+end-to-end parity (registry + rewrites + TVFs):
+
+    tools/run_main.sh graft.tools.Probe sql <corpus.tsv> <out.tsv>
 
 Driver-side tool (duckdb is the oracle); not part of the shipped library.
 """
