@@ -489,9 +489,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     injectFiles("read_text", asText = true)
     injectFiles("read_blob", asText = false)
 
-    // dialect pre-pass at the parser seam: plain spark.sql(...) gets
-    // QUALIFY / JSON arrows / pg type aliases / star EXCLUDE
-    ext.injectParser((_, delegate) => new GraftParser(delegate))
+    // the statement classifier and dialect pre-pass at the parser
+    // seam: plain spark.sql(...) takes the whole DuckDB surface. Each
+    // session builds its own parser, which sees that session's prepared
+    // statements and variables.
+    ext.injectParser((session, delegate) => new GraftParser(session, delegate))
 
     // opt-in interval-join rewrite (spark.graft.rangeJoin.binWidth)
     ext.injectOptimizerRule(BinnedRangeJoinRule)
@@ -501,20 +503,105 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** ParserInterface wrapper applying [[SqlRewrites]] before delegating
+/** ParserInterface wrapper classifying each statement
+  * ([[DuckStatements]]) and applying [[SqlRewrites]] before delegating
   * to the stock SparkSqlParser (SURVEY §7 M4 — "idiomatic: custom
   * ParserInterface delegating to SparkSqlParser"). `parsePlan` is the
-  * one place a statement is lowered from DuckDB SQL, whichever way it
-  * arrives (wire, `Engine.query`, library `spark.sql`).
+  * one place a statement is classified and lowered from DuckDB SQL,
+  * whichever way it arrives (wire, `Engine.query`, library `spark.sql`).
   */
-class GraftParser(delegate: ParserInterface) extends ParserInterface {
+class GraftParser(session: org.apache.spark.sql.SparkSession,
+    delegate: ParserInterface) extends ParserInterface {
   import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-  import org.apache.spark.sql.catalyst.plans.logical.{Distinct, SubqueryAlias, Union}
+  import org.apache.spark.sql.catalyst.plans.logical.{CreateView, Distinct, SubqueryAlias, Union}
+  import org.apache.spark.sql.execution.command.CreateViewCommand
 
   override def parsePlan(sqlText: String): LogicalPlan = {
     DuckAliases.bumpTxid() // one "transaction" per statement
-    renameInlineDefaults(planByName(SqlRewrites.rewriteFull(sqlText)))
+    DuckStatements.plan(this, session, sqlText)
   }
+
+  /** Spark's own parse of `sql` lowered from the DuckDB dialect: the
+    * plan of every statement the classifier leaves to Spark. */
+  def lowered(sql: String): LogicalPlan = {
+    val (text, subs) = hoistStatements(sql)
+    substitute(renameInlineDefaults(planByName(
+      SqlRewrites.rewriteFull(Macros.expand(text)))), subs) match {
+      // a view over a hoisted statement keeps its analyzed plan: its
+      // text names placeholders no later parse resolves. A stored view
+      // keeps only text.
+      case v: CreateViewCommand if subs.nonEmpty => v.copy(originalText = None)
+      case _: CreateView if subs.nonEmpty => throw new UnsupportedOperationException(
+        "a stored view cannot hold a FROM-position PIVOT, UNPIVOT, SUMMARIZE, " +
+          "DESCRIBE or SHOW statement; create a TEMP view")
+      case p => p
+    }
+  }
+
+  /** `plan` with each placeholder relation named in `subs` replaced by
+    * the plan it stands for */
+  private def substitute(plan: LogicalPlan,
+      subs: collection.Map[String, LogicalPlan]): LogicalPlan =
+    if (subs.isEmpty) plan
+    else plan.transformUpWithSubqueries {
+      case r: UnresolvedRelation
+          if r.multipartIdentifier.length == 1 &&
+            subs.contains(r.multipartIdentifier.head) =>
+        SubqueryAlias(r.multipartIdentifier.head, subs(r.multipartIdentifier.head))
+    }
+
+  /** DuckDB's PIVOT/UNPIVOT statements compose as FROM-position
+    * subqueries — `SELECT … FROM (UNPIVOT t ON …) u` (delegated
+    * surface via cpp:52), and so do SUMMARIZE, DESCRIBE and SHOW. Spark's
+    * parser has no statement-in-FROM form, so each parenthesized group
+    * is parsed as a statement of its own (dynamic column discovery
+    * included) and its plan replaces a placeholder relation. Quote-aware
+    * paren matching; nested groups resolve through the recursive parse.
+    */
+  private def hoistStatements(sql: String): (String, Map[String, LogicalPlan]) = {
+    if (!HoistRe.findFirstIn(sql).isDefined) return (sql, Map.empty)
+    var cur = sql
+    var subs = Map.empty[String, LogicalPlan]
+    var i = 0; var inStr = false
+    while (i < cur.length) {
+      val c = cur.charAt(i)
+      if (inStr) { if (c == '\'') inStr = false; i += 1 }
+      else if (c == '\'') { inStr = true; i += 1 }
+      else if (c == '(') {
+        val after = cur.substring(i + 1).dropWhile(_.isWhitespace)
+        val kw = after.takeWhile(_.isLetter).toUpperCase
+        // SUMMARIZE/DESCRIBE/SHOW only hoist in FROM position (the
+        // word before the paren is FROM/JOIN/,) — `(desc_col)` in an
+        // expression must NOT read as a DESCRIBE statement
+        lazy val fromPos = {
+          val before = cur.substring(0, i).trim
+          before.endsWith(",") || FromPosRe.matches(before)
+        }
+        if (kw == "PIVOT" || kw == "UNPIVOT" ||
+            (Set("SUMMARIZE", "DESCRIBE", "DESC", "SHOW").contains(kw) &&
+              fromPos)) {
+          // match the closing paren, quote-aware
+          var depth = 1; var j = i + 1; var s2 = false
+          while (j < cur.length && depth > 0) {
+            val cj = cur.charAt(j)
+            if (s2) { if (cj == '\'') s2 = false }
+            else if (cj == '\'') s2 = true
+            else if (cj == '(') depth += 1
+            else if (cj == ')') depth -= 1
+            j += 1
+          }
+          require(depth == 0, s"unbalanced parentheses around $kw subquery")
+          val name = s"__graft_stmt_${subs.size}"
+          subs += name -> parsePlan(cur.substring(i + 1, j - 1))
+          cur = cur.substring(0, i) + name + cur.substring(j)
+          i += name.length
+        } else i += 1
+      } else i += 1
+    }
+    (cur, subs)
+  }
+  private val HoistRe = "(?is)\\(\\s*((UN)?PIVOT|SUMMARIZE|DESC(RIBE)?|SHOW)\\b".r
+  private val FromPosRe = """(?is).*\b(FROM|JOIN)\z""".r
 
   /** DuckDB numbers anonymous VALUES columns col0, col1, … — Spark
     * starts at col1 (probed: `SELECT col0 FROM (VALUES (1),(2)) v`).
@@ -566,25 +653,11 @@ class GraftParser(delegate: ParserInterface) extends ParserInterface {
           val u = Union(Seq(acc, p), byName = true, allowMissingCol = true)
           acc = if (all) u else Distinct(u)
         }
-        tail match {
-          case Some(t) =>
-            delegate.parsePlan(s"SELECT * FROM __graft_ubn $t").transform {
-              case r: UnresolvedRelation
-                  if r.multipartIdentifier == Seq("__graft_ubn") =>
-                SubqueryAlias("__graft_ubn", acc)
-            }
-          case None => acc
-        }
+        tail.fold(acc)(t => substitute(
+          delegate.parsePlan(s"SELECT * FROM __graft_ubn $t"), Map("__graft_ubn" -> acc)))
       case None => UnnestHoist(delegate.parsePlan(cur))
     }
-    if (holders.isEmpty) top
-    else top.transform {
-      case r: UnresolvedRelation
-          if r.multipartIdentifier.length == 1 &&
-            holders.contains(r.multipartIdentifier.head) =>
-        SubqueryAlias(r.multipartIdentifier.head,
-          holders(r.multipartIdentifier.head))
-    }
+    substitute(top, holders)
   }
   /** Spark's one caller re-reads a stored view's body, which is text
     * `parsePlan` already lowered: it parses as it is. */

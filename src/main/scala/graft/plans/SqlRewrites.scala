@@ -432,23 +432,25 @@ object SqlRewrites {
     if (ms.length > 1) throw new IllegalArgumentException(
       "POSITIONAL JOIN: one per statement is supported; nest subqueries")
     val m = ms.head
-    // left relation: back to the nearest depth-0 FROM / JOIN / comma
-    var i = 0; var depth = 0; var inS = false
-    var lStart = -1
+    // left relation: back to the nearest FROM / JOIN / comma of the
+    // query block that holds the join (one start per open paren group)
+    var i = 0; var inS = false
+    val starts = scala.collection.mutable.Stack(-1)
     while (i < m.start) {
       val c = sql.charAt(i)
       if (inS) { if (c == '\'') inS = false; i += 1 }
       else c match {
         case '\'' => inS = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case ',' if depth == 0 => lStart = i + 1; i += 1
+        case '(' => starts.push(-1); i += 1
+        case ')' => if (starts.size > 1) starts.pop(); i += 1
+        case ',' => starts.update(0, i + 1); i += 1
         case _ =>
-          if (depth == 0 && (kwAt(sql, i, "FROM") || kwAt(sql, i, "JOIN"))) {
-            lStart = i + 4; i += 4
+          if (kwAt(sql, i, "FROM") || kwAt(sql, i, "JOIN")) {
+            starts.update(0, i + 4); i += 4
           } else i += 1
       }
     }
+    val lStart = starts.top
     if (lStart < 0) throw new IllegalArgumentException(
       "POSITIONAL JOIN: could not locate the left relation")
     val left = sql.substring(lStart, m.start).trim
@@ -456,7 +458,7 @@ object SqlRewrites {
     val stopKw = Seq("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
       "OFFSET", "UNION", "EXCEPT", "INTERSECT", "QUALIFY", "WINDOW",
       "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "ON", "USING")
-    var j = m.end; depth = 0; inS = false
+    var j = m.end; var depth = 0; inS = false
     var rEnd = -1
     while (j < sql.length && rEnd < 0) {
       val c = sql.charAt(j)
@@ -474,14 +476,31 @@ object SqlRewrites {
     }
     if (rEnd < 0) rEnd = sql.length
     val right = sql.substring(m.end, rEnd).trim
+    // each side keeps the name it is referenced by (`a.x` over
+    // `(VALUES (1)) a(x)`, `t.c` over a bare `t`); a side without one
+    // gets a helper name
+    def nameOf(rel: String, helper: String): String = rel match {
+      case relAliasRe(_, alias) if !SqlKeywords(alias.toUpperCase) => alias
+      case bareTableRe() => rel.split('.').last
+      case _ => helper
+    }
+    val (la, ra) = (nameOf(left, "__pjlt"), nameOf(right, "__pjrt")) match {
+      case (l, r) if l.equalsIgnoreCase(r) => ("__pjlt", "__pjrt")
+      case names => names
+    }
     def side(rel: String, col: String, alias: String) =
       s"(SELECT *, row_number() OVER (ORDER BY " +
         s"monotonically_increasing_id()) AS $col FROM $rel) $alias"
-    val repl = side(left, "__pjl", "__pjlt") + " FULL JOIN " +
-      side(right, "__pjr", "__pjrt") + " ON __pjlt.__pjl = __pjrt.__pjr"
+    val repl = side(left, "__pjl", la) + " FULL JOIN " +
+      side(right, "__pjr", ra) + s" ON $la.__pjl = $ra.__pjr"
     hideHelpers(sql.substring(0, lStart) + " " + repl + " " +
-      sql.substring(rEnd), lStart, Seq("__pjlt" -> "__pjl", "__pjrt" -> "__pjr"))
+      sql.substring(rEnd), lStart, Seq(la -> "__pjl", ra -> "__pjr"))
   }
+  /** a relation's trailing `[AS] name [(columns)]` */
+  private val relAliasRe =
+    """(?is)(.*[\w)\]'"`])\s+(?:AS\s+)?([A-Za-z_]\w*)\s*(?:\([^()]*\))?""".r
+  private val bareTableRe = """[A-Za-z_][\w.]*""".r
+  private val SqlKeywords = Set("TABLESAMPLE", "LATERAL", "NATURAL", "AS")
 
   /** Keep a join rewrite's helper columns, each `(qualifier, name)`,
     * out of every output. They can surface only through a star in the

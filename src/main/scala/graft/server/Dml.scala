@@ -1,6 +1,6 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** UPDATE / DELETE over catalog parquet tables as copy-on-write
   * rewrites — the surface the reference serves through DuckDB
@@ -48,14 +48,14 @@ object Dml {
   private def matchPred(p: Option[String]): String =
     p.map(x => s"coalesce(CAST(($x) AS BOOLEAN), false)").getOrElse("true")
 
-  /** keyword at paren-depth 0 outside quotes — distinguishes a real
-    * `UPDATE … FROM` / `DELETE … USING` clause from the same word
-    * inside a subquery or string literal, so unsupported DML shapes
-    * fail with a clear message instead of a downstream parse error.
-    */
-  /** public seam for Engine's RETURNING handler */
-  def hasTopLevelKeyword(s: String, kw: String): Boolean = hasTopLevel(s, kw)
-  def splitAssignments(setList: String): Map[String, String] =
+  /** What a `… RETURNING` clause reads: the statement's matched rows
+    * (for UPDATE with their new values, for INSERT the landed rows),
+    * handed over snapshotted, before the table is rewritten. */
+  type Returning = Option[DataFrame => Unit]
+  private def hand(returning: Returning, rows: => DataFrame): Unit =
+    returning.foreach(_(rows.localCheckpoint(eager = true)))
+
+  private def splitAssignments(setList: String): Map[String, String] =
     splitTopLevel(setList).map { a =>
       val idx = a.indexOf('=')
       require(idx > 0, s"bad SET assignment: $a")
@@ -65,7 +65,7 @@ object Dml {
   /** `SET col = DEFAULT` resolves to the column's declared default
     * (recorded by Spark as CURRENT_DEFAULT column metadata) or NULL
     * when none was declared — pg/DuckDB UPDATE surface. */
-  def resolveDefaultSets(schema: org.apache.spark.sql.types.StructType,
+  private def resolveDefaultSets(schema: org.apache.spark.sql.types.StructType,
       sets: Map[String, String]): Map[String, String] =
     sets.map { case (c, e) =>
       if (e.trim.equalsIgnoreCase("default")) {
@@ -77,6 +77,11 @@ object Dml {
       } else (c, e)
     }
 
+  /** keyword at paren-depth 0 outside quotes — distinguishes a real
+    * `UPDATE … FROM` / `DELETE … USING` clause from the same word
+    * inside a subquery or string literal, so unsupported DML shapes
+    * fail with a clear message instead of a downstream parse error.
+    */
   private def hasTopLevel(s: String, kw: String): Boolean = {
     val low = s.toLowerCase
     val k = kw.toLowerCase
@@ -314,13 +319,15 @@ object Dml {
     * columns, enforces the constraints (one map-side-combining
     * aggregate pass over the batch), then appends under the table's
     * writer lock. Returns None for unguarded tables — those keep
-    * Spark's native INSERT with no extra pass. Error messages are
+    * Spark's native INSERT with no extra pass — unless a RETURNING
+    * clause wants the landed rows. Error messages are
     * DuckDB's own, pinned by probe (tools/probe_r10h.tsv ddl rows).
     */
-  def guardedInsert(session: SparkSession, sql: String): Option[Long] = {
+  def guardedInsert(session: SparkSession, sql: String,
+      returning: Returning = None): Option[Long] = {
     val m = insertHeadRe.findPrefixMatchOf(sql).getOrElse(return None)
     val table = m.group(1)
-    if (!graft.TableConstraints.needsGuard(table)) return None
+    if (returning.isEmpty && !graft.TableConstraints.needsGuard(table)) return None
     var rest = sql.substring(m.end).trim.stripSuffix(";").trim
     val schema = session.table(table).schema
     val genSet = graft.TableConstraints.generatedOf(table)
@@ -411,13 +418,15 @@ object Dml {
         graft.TableConstraints.enforce(table, full)
         graft.TableConstraints.enforceKeysAppend(session, table, full)
         val n = full.count()
+        returning.foreach(_(full))
         full.write.mode("append").insertInto(table)
         n
       } finally session.catalog.dropTempView(srcView)
     })
   }
 
-  def delete(session: SparkSession, sql: String): Long = sql.trim match {
+  def delete(session: SparkSession, sql: String,
+      returning: Returning = None): Long = sql.trim match {
     // pg/DuckDB `DELETE FROM t USING u WHERE pred` — the predicate
     // correlates target and source rows; a target row dies when ANY
     // source row matches (EXISTS semantics, like pg). Evaluated as a
@@ -434,6 +443,8 @@ object Dml {
           s"JOIN $using ON coalesce(CAST(($where) AS BOOLEAN), false)")
         .localCheckpoint()
       doomed.createOrReplaceTempView("__del_hit")
+      hand(returning, session.sql(s"SELECT * FROM __del_t WHERE __rid IN " +
+        s"(SELECT __rid FROM __del_hit)").drop("__rid"))
       val n = doomed.count()
       if (n > 0) {
         graft.TableConstraints.enforceRestrict(session, table,
@@ -450,6 +461,7 @@ object Dml {
     }
     case deleteRe(table, whereOrNull) => lockFor(table).synchronized {
       val pred = matchPred(Option(whereOrNull))
+      hand(returning, session.sql(s"SELECT * FROM $table WHERE $pred"))
       val n = session.sql(s"SELECT count(*) FROM $table WHERE $pred")
         .collect()(0).getLong(0)
       if (n > 0) {
@@ -473,7 +485,8 @@ object Dml {
         "WHERE predicate]")
   }
 
-  def update(session: SparkSession, sql: String): Long = sql.trim match {
+  def update(session: SparkSession, sql: String,
+      returning: Returning = None): Long = sql.trim match {
     // pg/DuckDB `UPDATE t SET … FROM u WHERE pred`: SET expressions
     // may reference source columns. pg picks an ARBITRARY source row
     // when several match one target row; this engine errors loudly
@@ -518,6 +531,10 @@ object Dml {
             case None => s"$tAlias.`${f.name}` AS `${f.name}`"
           }
         }.mkString(", ")
+        hand(returning, graft.TableConstraints.regenerate(session, table,
+          session.sql(s"SELECT $proj FROM __upd_t $tAlias JOIN " +
+            s"(SELECT *, true AS __m FROM $uName) $uAlias " +
+            s"ON CAST(($where) AS BOOLEAN)").drop("__rid")))
         val n = session.sql(
           s"SELECT count(*) FROM __upd_t $tAlias JOIN $using " +
             s"ON CAST(($where) AS BOOLEAN)").collect()(0).getLong(0)
@@ -569,6 +586,8 @@ object Dml {
           case None => f.name
         }
       }.mkString(", ")
+      hand(returning, graft.TableConstraints.regenerate(session, table,
+        session.sql(s"SELECT $proj FROM $table WHERE $pred")))
       val n = session.sql(s"SELECT count(*) FROM $table WHERE $pred")
         .collect()(0).getLong(0)
       if (n > 0) {

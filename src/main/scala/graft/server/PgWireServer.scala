@@ -7,9 +7,12 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Command => LogicalCommand}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.Engine
+import graft.{CopyFromStdin, CopyToStdout, DuckCommand, DuckStatements, EmptyStatement, Engine}
 import PgWire._
 
 /** PostgreSQL wire-protocol server fronting a shared SparkSession —
@@ -178,13 +181,16 @@ private case object EmptyStmt extends Stmt
 private final class Command(run: => Option[String]) extends Stmt {
   lazy val tag: Option[String] = run
 }
-/** A row set. `df` is resolved once, which for DML … RETURNING runs
-  * the DML; `shape` is its row type, which `effectFreeShape` gives
-  * without running anything. */
-private final class Rows(query: => DataFrame, val tag: Long => String,
-    effectFreeShape: Option[() => StructType] = None) extends Stmt {
+/** A row set. `df` is resolved once, which for a command (DML …
+  * RETURNING) runs it; `shape` is its row type, which a command
+  * declares without running. */
+private final class Rows(plan: LogicalPlan, query: => DataFrame,
+    val tag: Long => String) extends Stmt {
   lazy val df: DataFrame = query
-  lazy val shape: StructType = effectFreeShape.fold(df.schema)(_())
+  lazy val shape: StructType = plan match {
+    case c: LogicalCommand => c.schema
+    case _ => df.schema
+  }
 }
 
 /** Per-connection protocol state machine. Both protocols take one
@@ -398,154 +404,55 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     w.flushOut()
   }
 
-  private def headOf(sql: String): String =
-    sql.trim.takeWhile(!_.isWhitespace).toUpperCase
-
-  /** statements that answer a row set */
-  private val RowHeads = Set("SELECT", "WITH", "VALUES", "TABLE", "SHOW",
-    "DESCRIBE", "DESC", "EXPLAIN", "FROM", "SUMMARIZE", "PRAGMA", "CALL",
-    "PIVOT", "UNPIVOT", "EXECUTE")
-
-  private def commandTag(sql: String, rows: Long): String = headOf(sql) match {
-    case h if RowHeads(h) => s"SELECT $rows"
-    case "INSERT" => s"INSERT 0 $rows"
-    case "UPDATE" => s"UPDATE $rows"
-    case "DELETE" => s"DELETE $rows"
-    case "BEGIN" => "BEGIN"
-    case "COMMIT" | "END" => "COMMIT"
-    case "ROLLBACK" | "ABORT" => "ROLLBACK"
-    case "SET" => "SET"
-    case verb @ ("CREATE" | "DROP") => verb + " " + sql.trim.split("\\s+")
-      .iterator.drop(1).map(_.toUpperCase).find(!TagModifiers(_)).getOrElse("")
-    case other => other
-  }
-
-  /** words between CREATE/DROP and the object kind: pg's tag names the
-    * kind (`CREATE OR REPLACE TABLE` answers `CREATE TABLE`) */
-  private val TagModifiers = Set("OR", "REPLACE", "TEMP", "TEMPORARY", "UNIQUE")
-
-  private val insertTableRe =
-    """(?is)^\s*INSERT\s+(?:OR\s+(?:REPLACE|IGNORE)\s+)?INTO\s+([\w.]+).*""".r
-  private val setVariableRe = """(?is)^\s*SET\s+VARIABLE\s""".r
-
-  /** The dispatch both protocols share: classify `sql` and say how it
-    * runs, running nothing. Statements whose effect is the command
-    * itself (DDL, DML, SET, PREPARE, COPY) run when their tag is first
-    * asked for; a row set runs when it is first streamed, or, when it
-    * is free of effects, analyzes when its shape is first asked for. */
+  /** The dispatch both protocols share: parse `sql` once, as
+    * `spark.sql` does, and say how it runs by its plan node, running
+    * nothing. A command runs when its tag is first asked for; a row set
+    * runs when it is first streamed, or analyzes when its shape is
+    * first asked for. */
   private def plan(sql: String): Stmt = {
-    def command(run: => String) = new Command(Some(run))
-    def engine = Engine.query(session, sql)
-    val head = headOf(sql)
-    head match {
-      case "" => EmptyStmt
-      case "EXECUTE" if Engine.executeText(session, sql).isDefined =>
-        plan(Engine.executeText(session, sql).get)
-      case "BEGIN" | "COMMIT" | "END" | "ROLLBACK" | "ABORT" =>
-        // accepted-and-meaningless, observably identical to the
-        // reference whose per-query Connection kills txn state (cpp:42)
-        command(commandTag(sql, 0))
-      case "SET" if setVariableRe.findFirstIn(sql).isEmpty =>
-        command { setStatement(sql); "SET" }
-      case "SHOW" if pgShow(sql).isDefined =>
-        // pg session variables drivers probe on connect (pgjdbc sends
-        // SHOW TRANSACTION ISOLATION LEVEL); Spark's SHOW TABLES etc.
-        // falls through to the engine below
-        val (colName, value) = pgShow(sql).get
-        new Rows(session.sql(s"SELECT '$value' AS `$colName`"), _ => "SHOW")
-      case "COPY" => new Command(copyStatement(sql).map(n => s"COPY $n"))
-      case "INSERT" | "UPDATE" | "DELETE" if Engine.splitReturning(sql).isDefined =>
-        // Engine.query splits the clause, runs the DML, and answers the
-        // returned rows
-        new Rows(sql match {
-          case insertTableRe(tbl) => Dml.lockFor(tbl).synchronized(engine)
-          case _ => engine
-        }, commandTag(sql, _), Some(() => Engine.returningShape(session, sql)))
-      case "UPDATE" => command(s"UPDATE ${Dml.update(session, sql)}")
-      case "DELETE" => command(s"DELETE ${Dml.delete(session, sql)}")
-      case "INSERT" => command(insert(sql))
-      case "PREPARE" | "DEALLOCATE" => command { engine; head }
-      case "WITH" if Dml.hasTopLevelKeyword(sql, "insert") =>
-        command(s"INSERT 0 ${affectedRows(engine)}")
-      case _ =>
-        PgCatalogShim.intercept(session, sql) match {
-          case Some(listing) => new Rows(listing, n => s"SELECT $n")
-          case None if RowHeads(head) => new Rows(engine, commandTag(sql, _))
-          // DDL ran eagerly inside Engine.query
-          case None => command(commandTag(sql, affectedRows(engine)))
-        }
+    val tracker = new QueryPlanningTracker
+    val parsed = ColumnBridge.parse(session, sql, tracker)
+    def query = Engine.query(session, sql, parsed, tracker)
+    parsed match {
+      case _: EmptyStatement => EmptyStmt
+      case c: CopyToStdout =>
+        new Command(Some(copyOut(Engine.query(session, sql, c.source, tracker), c)))
+      case c: CopyFromStdin => new Command(copyIn(c))
+      case c: DuckCommand if c.answersRows => new Rows(c, query, c.pgTag)
+      case c: DuckCommand => new Command(Some(c.pgTag(query)))
+      case c: LogicalCommand if c.output.isEmpty =>
+        new Command(Some { query; c.getTagValue(DuckStatements.PgTag).getOrElse("") })
+      case p => new Rows(p, query, n => s"SELECT $n")
     }
   }
 
-  /** INSERT shares Dml's per-table writer serialization: a concurrent
-    * copy-on-write UPDATE/DELETE snapshotting the same table mid-append
-    * would silently drop the appended rows. */
-  private def insert(sql: String): String = sql match {
-    case insertTableRe(tbl) =>
-      // DuckDB upsert surface first (Spark's parser has no ON
-      // CONFLICT) — takes its own per-table lock
-      val n = Dml.insertOnConflict(session, sql).getOrElse(
-        affectedRows(Dml.lockFor(tbl).synchronized(Engine.query(session, sql))))
-      s"INSERT 0 $n"
-    case _ => commandTag(sql, affectedRows(Engine.query(session, sql)))
+  /** `COPY … TO STDOUT` (psql `\copy t to file`): CopyOutResponse, one
+    * CopyData per row (pg text format or CSV), CopyDone. Streams
+    * through ResultEncoder — one partition in memory at a time; STDOUT
+    * egress is single-socket by nature (scale exports use TO 'path'). */
+  private def copyOut(df: DataFrame, c: CopyToStdout): String = {
+    val fields = df.schema.fields
+    w.int8(0).int16(fields.length)
+    fields.foreach(_ => w.int16(0))
+    w.send('H') // CopyOutResponse
+    val enc = ResultEncoder(w, df, ResultEncoder.Copy(c.csv, c.delim.toString))
+    if (c.csv && c.header) enc.csvHeader()
+    val n = enc.stream(Long.MaxValue)
+    w.send('c') // CopyDone
+    s"COPY $n"
   }
 
-  /** `COPY (query)|table TO 'path' (FORMAT PARQUET|CSV|JSON [, HEADER])`,
-    * `COPY table FROM 'path' (...)`, `COPY table FROM STDIN [...]`
-    * — DuckDB/pg import/export surface mapped onto DataFrame
-    * readers/writers. The reference forwards COPY verbatim to the
-    * delegated engine (src/duckdb_pgwire_extension.cpp:52); this is
-    * the Spark-native equivalent. Returns Some(rowCount) for a
-    * completed statement, None after switching into copy-in mode
-    * (CopyInResponse sent; rows arrive as CopyData messages).
-    */
-  private val copyFromStdinRe =
-    """(?is)^COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(?:WITH\s*)?(.*?)\s*;?\s*$""".r
-  private val copyToStdoutRe =
-    """(?is)^COPY\s+(\(.*\)|[\w.]+)\s+TO\s+STDOUT\s*(?:WITH\s*)?(.*?)\s*;?\s*$""".r
-
-  private def copyStatement(sql: String): Option[Long] = sql.trim match {
-    case copyToStdoutRe(src, optsRaw) =>
-      // psql `\copy t to file` path: CopyOutResponse, one CopyData per
-      // row (pg text format or CSV), CopyDone. Streams through
-      // ResultEncoder — one partition in memory at a time; STDOUT
-      // egress is single-socket by nature (scale exports use TO 'path').
-      val df =
-        if (src.startsWith("("))
-          Engine.query(session, src.stripPrefix("(").stripSuffix(")"))
-        else session.table(src)
-      val opts = Option(optsRaw).getOrElse("").toUpperCase
-      val csv = opts.contains("CSV")
-      val header = opts.contains("HEADER")
-      val delim = CopyOps.wireDelim(optsRaw, csv)
-      val fields = df.schema.fields
-      w.int8(0).int16(fields.length)
-      fields.foreach(_ => w.int16(0))
-      w.send('H') // CopyOutResponse
-      val enc = ResultEncoder(w, df, ResultEncoder.Copy(csv, delim.toString))
-      if (csv && header) enc.csvHeader()
-      val n = enc.stream(Long.MaxValue)
-      w.send('c') // CopyDone
-      Some(n)
-    case CopyOps.copyToRe(src, path, optsOrNull) =>
-      Some(CopyOps.copyTo(session, src, path, optsOrNull))
-    case CopyOps.copyFromFileRe(table, path, optsRaw) =>
-      Some(CopyOps.copyFromFile(session, table, path, optsRaw))
-    case copyFromStdinRe(table, optsRaw) =>
-      val opts = Option(optsRaw).getOrElse("").toUpperCase
-      val csv = opts.contains("CSV")
-      val in = new CopyIn(session, table, csv, header = opts.contains("HEADER"),
-        delim = CopyOps.wireDelim(optsRaw, csv).toByte)
-      copyIn = Some(in)
-      // CopyInResponse: overall text format, per-column text format
-      w.int8(0).int16(in.columns.length)
-      in.columns.foreach(_ => w.int16(0))
-      w.send('G')
-      w.flushOut()
-      None
-    case _ =>
-      throw new IllegalArgumentException(
-        "COPY syntax: COPY (query)|table TO 'path' (FORMAT PARQUET|CSV|JSON [, HEADER]) | COPY table FROM 'path' (...) | COPY table FROM STDIN [(FORMAT csv [, HEADER])]")
+  /** `COPY … FROM STDIN`: CopyInResponse, then rows arrive as CopyData
+    * messages until CopyDone; completion is deferred to [[copyInDone]]. */
+  private def copyIn(c: CopyFromStdin): Option[String] = {
+    val in = new CopyIn(session, c.table, c.csv, c.header, c.delim.toByte)
+    copyIn = Some(in)
+    // CopyInResponse: overall text format, per-column text format
+    w.int8(0).int16(in.columns.length)
+    in.columns.foreach(_ => w.int16(0))
+    w.send('G')
+    w.flushOut()
+    None
   }
 
   /** CopyDone: parse, type and append the buffered copy-in payload
@@ -566,65 +473,6 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
     copyIn = None
     errorResponse(new IllegalArgumentException(s"COPY aborted: $reason"))
     readyForQuery()
-  }
-
-  private def affectedRows(df: DataFrame): Long =
-    // Engine.query answers DML with DuckDB's one-row Count column
-    // (guarded inserts, upserts, and now plain INSERTs); native
-    // commands carry the count in their write metrics instead
-    if (df.schema.length == 1 && df.schema.head.name == "Count")
-      df.collect().headOption.map(_.getLong(0)).getOrElse(0L)
-    else df.queryExecution.executedPlan match {
-      case c: org.apache.spark.sql.execution.CommandResultExec =>
-        c.commandPhysicalPlan.metrics.get("numOutputRows")
-          .map(_.value).getOrElse(0L)
-      case _ => 0L
-    }
-
-  /** `SHOW <pg session variable>` → (column name, value) of its
-    * one-row result, like Postgres. Returns None for anything that is
-    * not a known pg variable so Spark's own SHOW TABLES / SHOW
-    * DATABASES still work.
-    */
-  private def pgShow(sql: String): Option[(String, String)] = {
-    val m = """(?is)^SHOW\s+(.+?)\s*;?\s*$""".r
-    val varName = sql.trim match {
-      case m(v) => v.trim.toLowerCase.replaceAll("\\s+", " ")
-      case _ => return None
-    }
-    val known: Map[String, (String, String)] = Map(
-      "transaction isolation level" ->
-        ("transaction_isolation", "read committed"),
-      "server_version" -> ("server_version", "15.0 (graft-spark)"),
-      "server_encoding" -> ("server_encoding", "UTF8"),
-      "client_encoding" -> ("client_encoding", "UTF8"),
-      "datestyle" -> ("DateStyle", "ISO, MDY"),
-      "timezone" -> ("TimeZone",
-        session.conf.get("spark.sql.session.timeZone", "UTC")),
-      "search_path" -> ("search_path", "public"),
-      "standard_conforming_strings" ->
-        ("standard_conforming_strings", "on"))
-    known.get(varName)
-  }
-
-  /** SET allowlist → session conf; everything else accepted as no-op
-    * (psql sends extra_float_digits etc. — same amnesty the reference
-    * gets from per-query connections).
-    */
-  private def setStatement(sql: String): Unit = {
-    val m = """(?is)SET\s+([\w.]+)\s*(?:=|TO)\s*(.+)""".r
-    sql.trim match {
-      case m(key, value) =>
-        val allow = Set("spark.sql.shuffle.partitions",
-          "spark.sql.ansi.enabled", "spark.sql.session.timeZone")
-        val k = key.toLowerCase match {
-          case "timezone" => "spark.sql.session.timeZone"
-          case other => other
-        }
-        if (allow.contains(k))
-          session.conf.set(k, value.trim.stripPrefix("'").stripSuffix("'"))
-      case _ =>
-    }
   }
 
   private def rowDescription(schema: StructType, fmts: Array[Int]): Unit = {

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkRuntimeException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -55,6 +55,19 @@ object ColumnBridge {
         }
       }
     }
+
+  /** `SparkSession.sql`, split in two: `parse` runs the session's parser
+    * under the tracker's PARSING phase, and `ofRows` analyzes the plan
+    * (running it when it is a command) under the same tracker. */
+  def parse(session: SparkSession, sql: String,
+      tracker: QueryPlanningTracker): LogicalPlan = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    s.withActive(tracker.measurePhase(QueryPlanningTracker.PARSING)(
+      s.sessionState.sqlParser.parsePlan(sql)))
+  }
+  def ofRows(session: SparkSession, plan: LogicalPlan,
+      tracker: QueryPlanningTracker = new QueryPlanningTracker): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan, tracker)
 
   /** An analyzed `plan` as a DataFrame of `session`, so that one plan
     * serves many sessions without being analyzed again. Each caller

@@ -318,6 +318,18 @@ class CompatSpec extends SparkSpecBase {
       Seq(Seq(1, 3), Seq(2, null)))
   }
 
+  test("POSITIONAL JOIN in a subquery, and under its sides' own names") {
+    // duckdb 1.0.0 answers each of these
+    def rows(sql: String) = Engine.query(spark, sql).collect()
+      .map(r => (r.get(0), r.get(1))).toSeq.sortBy(_._1.toString)
+    assert(rows("SELECT * FROM (SELECT * FROM (VALUES (1)) a(x) " +
+      "POSITIONAL JOIN (VALUES (2)) b(y)) s") == Seq((1, 2)))
+    assert(rows("SELECT a.x, b.y FROM (VALUES (1)) a(x) " +
+      "POSITIONAL JOIN (VALUES (2)) b(y)") == Seq((1, 2)))
+    assert(rows("SELECT a.x, b.y FROM (VALUES (1),(3)) a(x) " +
+      "POSITIONAL JOIN (VALUES (2)) b(y)") == Seq((1, 2), (3, null)))
+  }
+
   /** each (name, DDL) creates `name` over a lowered join; `SELECT *`
     * from it shows exactly `cols`, and `rows` ordered by `key` */
   private def assertNoHelpers(ddl: Seq[(String, String)], cols: Seq[String],

@@ -73,6 +73,57 @@ class ExtendedProtocolSpec extends SparkSpecBase {
     }
   }
 
+  test("Describe of each command kind runs nothing") {
+    withClient { c =>
+      ok(c.query("DROP TABLE IF EXISTS ep_k; CREATE TABLE ep_k (a INT) USING parquet; " +
+        "INSERT INTO ep_k VALUES (1), (2); PREPARE ep_keep AS SELECT 1 AS v"))
+      val out = java.nio.file.Files.createTempDirectory("ep-copy").resolve("out.csv")
+      val commands = Seq(
+        "CREATE TABLE ep_new (a INT) USING parquet",
+        "CREATE TABLE ep_ctas AS SELECT 1 AS a",
+        "DROP TABLE ep_k",
+        "TRUNCATE ep_k",
+        "INSERT INTO ep_k VALUES (9)",
+        "UPDATE ep_k SET a = 0",
+        "DELETE FROM ep_k",
+        "ALTER TABLE ep_k RENAME COLUMN a TO b",
+        "CREATE MACRO ep_m(x) AS x + 1",
+        "CREATE SEQUENCE ep_seq",
+        "CREATE TYPE ep_mood AS ENUM ('sad', 'ok')",
+        "COMMENT ON TABLE ep_k IS 'described'",
+        "PREPARE ep_p AS SELECT 2 AS v",
+        "DEALLOCATE ALL",
+        "SET TimeZone TO 'Asia/Tokyo'",
+        "SET VARIABLE ep_var = 5",
+        s"COPY ep_k TO '$out' (FORMAT CSV)",
+        "COPY ep_k FROM STDIN")
+      for (sql <- commands) {
+        c.parse("", sql); c.describe('S', "")
+        assert(types(ok(c.sync())) == "1tnZ", sql)
+      }
+      c.parse("", "DELETE FROM ep_k RETURNING a"); c.describe('S', "")
+      val ret = ok(c.sync())
+      assert(types(ret) == "1tTZ" && WireClient.columns(ret) == Seq("a"))
+      // the catalog, the registries, the prepared store and the conf
+      // are as they were
+      assert(rows(ok(c.query("SELECT a FROM ep_k ORDER BY a"))) ==
+        Seq(Seq(Some("1")), Seq(Some("2"))))
+      for (t <- Seq("ep_new", "ep_ctas"))
+        assert(!spark.catalog.tableExists(t), t)
+      assert(Macros.expand("SELECT ep_m(1)") == "SELECT ep_m(1)")
+      assert(!Sequences.list().exists(_._1 == "ep_seq"))
+      assert(!EnumTypes.isDefined("ep_mood"))
+      assert(Comments.get("table", "ep_k").isEmpty)
+      assert(!java.nio.file.Files.exists(out))
+      assert(rows(ok(c.query("EXECUTE ep_keep"))) == Seq(Seq(Some("1"))))
+      assert(errorFields(c.query("EXECUTE ep_p")).get('M').exists(_.contains("does not exist")))
+      assert(rows(ok(c.query("SHOW TimeZone"))) == Seq(Seq(Some("UTC"))))
+      assert(rows(ok(c.query("SELECT getvariable('ep_var') IS NULL"))) ==
+        Seq(Seq(Some("t"))))
+      ok(c.query("DROP TABLE ep_k"))
+    }
+  }
+
   test("transaction verbs, SET and SHOW work over Parse") {
     withClient { c =>
       for (v <- Seq("BEGIN", "COMMIT", "ROLLBACK"))

@@ -193,6 +193,11 @@ class PgWireSpec extends SparkSpecBase {
     assert(tagOf("CREATE TEMPORARY VIEW tag_v AS SELECT 1 AS a") == "CREATE VIEW")
     assert(tagOf("CREATE INDEX tag_i ON tag_t (a)") == "CREATE INDEX")
     assert(tagOf("DROP INDEX tag_i") == "DROP INDEX")
+    // pg 15's tags for the statements whose keyword is not the tag
+    assert(tagOf("TRUNCATE tag_t") == "TRUNCATE TABLE")
+    assert(tagOf("ALTER TABLE tag_t RENAME COLUMN a TO b") == "ALTER TABLE")
+    assert(tagOf("EXPLAIN SELECT 1") == "EXPLAIN")
+    assert(tagOf("DEALLOCATE ALL") == "DEALLOCATE ALL")
     assert(tagOf("DROP VIEW tag_v") == "DROP VIEW")
     assert(tagOf("DROP TABLE tag_t") == "DROP TABLE")
     c.close()

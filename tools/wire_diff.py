@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Byte-level wire diff of two builds of the server.
 
-    python3 tools/wire_diff.py [--extended] BUILD_A.json BUILD_B.json [SF_DIR]
+    python3 tools/wire_diff.py [--extended] [--corpus TSV] BUILD_A.json BUILD_B.json [SF_DIR]
 
 Each BUILD_*.json is the build state perfbench writes for a checkout
 (`.bench_build/perfbench/build-<hash>.json`: classpath, java options
@@ -15,6 +15,12 @@ Parse/Bind/Describe/Execute/Sync round trip instead of a Query, and its
 bytes must still match A's simple-query bytes. Rows whose order differs
 between the two runs (statements without ORDER BY, or ties under one)
 are compared as multisets and reported separately, each by name.
+
+With --corpus TSV (tools/conformance_corpus.tsv or
+tools/semantics_corpus.tsv) the statements are the file's third column
+instead, in file order, setup and DDL included, each named by its first
+column and line. An ErrorResponse is then compared by its SQLSTATE
+only: error messages carry plan ids that differ from run to run.
 Run it from the root of a checkout; exit status 1 on any difference.
 """
 import json
@@ -68,25 +74,55 @@ class Raw:
         return self.until_ready()
 
 
+def corpus_statements(path):
+    """(name, sql) of each statement line of a probe corpus TSV"""
+    out = []
+    with open(path, encoding="utf-8") as f:
+        for n, line in enumerate(f, 1):
+            parts = line.rstrip("\n").split("\t", 2)
+            if len(parts) == 3 and not parts[0].startswith("--"):
+                out.append((f"{parts[0]}@{n}", parts[2]))
+    return out
+
+
+def sqlstate(body):
+    """the SQLSTATE field of an ErrorResponse body"""
+    for field in body.split(b"\0"):
+        if field[:1] == b"C":
+            return field[1:]
+    return b""
+
+
 def main():
-    args = [a for a in sys.argv[1:] if a != "--extended"]
+    argv = sys.argv[1:]
+    corpus = None
+    if "--corpus" in argv:
+        k = argv.index("--corpus")
+        corpus = argv[k + 1]
+        del argv[k:k + 2]
+    args = [a for a in argv if a != "--extended"]
     if len(args) < 2:
         sys.exit(__doc__)
     builds = [json.load(open(p)) for p in args[:2]]
     sf_dir = args[2] if len(args) > 2 else server.SF001
-    sql = builds[0]["oracle_sql"]
-    names = [n for n in sorted(sql) if n not in workloads.KNOWN_FAILING]
+    if corpus:
+        stmts = corpus_statements(corpus)
+    else:
+        sql = builds[0]["oracle_sql"]
+        stmts = [(n, sql[n]) for n in sorted(sql) if n not in workloads.KNOWN_FAILING]
+    kept = (lambda t, body: (t, sqlstate(body)) if corpus and t == b"E" else (t, body))
     run_dir = tempfile.mkdtemp(prefix="wire_diff-", dir=server.WORK if os.path.isdir(server.WORK) else None)
     servers = [server.Server(b, sf_dir, os.path.join(run_dir, str(i))) for i, b in enumerate(builds)]
     try:
         for s in servers:
             s.wait_ready()
         conns = [Raw(s.port) for s in servers]
-        runs = [conns[0].query, conns[1].extended if "--extended" in sys.argv else conns[1].query]
+        runs = [conns[0].query, conns[1].extended if "--extended" in argv else conns[1].query]
         same = 0
         reordered, differ = [], []
-        for n in names:
-            got = [[m for m in run(sql[n]) if m[0] in (b"T", b"D", b"C", b"E")] for run in runs]
+        for n, text in stmts:
+            got = [[kept(*m) for m in run(text) if m[0] in (b"T", b"D", b"C", b"E")]
+                   for run in runs]
             if got[0] == got[1]:
                 same += 1
                 continue
@@ -99,7 +135,7 @@ def main():
                 differ.append(n)
                 print(f"DIFF {n}: {len(a)} vs {len(b)} messages, first at {i}: "
                       f"{a[i] if i < len(a) else None!r} / {b[i] if i < len(b) else None!r}")
-        print(json.dumps({"statements": len(names), "identical": same,
+        print(json.dumps({"statements": len(stmts), "identical": same,
                           "identical_as_multiset": len(reordered), "reordered": reordered,
                           "different": differ}))
         return 1 if differ else 0
