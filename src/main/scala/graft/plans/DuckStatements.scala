@@ -720,16 +720,11 @@ object DuckStatements {
     val m = RecursiveUnionRe.findFirstMatchIn(sql).getOrElse(return None)
     val name = m.group(1)
     val cols = Option(m.group(2))
-    // match the AS(...) span
-    var depth = 1; var i = m.end
-    while (i < sql.length && depth > 0) {
-      val c = sql.charAt(i)
-      if (c == '(') depth += 1 else if (c == ')') depth -= 1
-      i += 1
-    }
-    if (depth != 0) return None
-    val body = sql.substring(m.end, i - 1)
-    val outer = sql.substring(i).trim
+    // the AS(...) span
+    val close = SqlRewrites.matchParen(sql, m.end - 1)
+    if (close < 0) return None
+    val body = sql.substring(m.end, close)
+    val outer = sql.substring(close + 1).trim
     if (!outer.toUpperCase.startsWith("SELECT")) return None
     // split at the FIRST top-level UNION that is NOT `UNION ALL`
     val unionRe = """(?i)\bUNION\b(\s+ALL\b)?""".r

@@ -580,20 +580,11 @@ class GraftParser(session: org.apache.spark.sql.SparkSession,
         if (kw == "PIVOT" || kw == "UNPIVOT" ||
             (Set("SUMMARIZE", "DESCRIBE", "DESC", "SHOW").contains(kw) &&
               fromPos)) {
-          // match the closing paren, quote-aware
-          var depth = 1; var j = i + 1; var s2 = false
-          while (j < cur.length && depth > 0) {
-            val cj = cur.charAt(j)
-            if (s2) { if (cj == '\'') s2 = false }
-            else if (cj == '\'') s2 = true
-            else if (cj == '(') depth += 1
-            else if (cj == ')') depth -= 1
-            j += 1
-          }
-          require(depth == 0, s"unbalanced parentheses around $kw subquery")
+          val close = SqlRewrites.matchParen(cur, i)
+          require(close > 0, s"unbalanced parentheses around $kw subquery")
           val name = s"__graft_stmt_${subs.size}"
-          subs += name -> parsePlan(cur.substring(i + 1, j - 1))
-          cur = cur.substring(0, i) + name + cur.substring(j)
+          subs += name -> parsePlan(cur.substring(i + 1, close))
+          cur = cur.substring(0, i) + name + cur.substring(close + 1)
           i += name.length
         } else i += 1
       } else i += 1

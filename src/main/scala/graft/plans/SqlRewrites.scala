@@ -1755,8 +1755,9 @@ object SqlRewrites {
     Some(s"$outerSel * EXCEPT (__qualify) FROM (\n  $inner\n) WHERE __qualify")
   }
 
-  /** index of the close paren matching the open paren at `open`. */
-  private def matchParen(s: String, open: Int): Int = {
+  /** index of the close paren matching the open paren at `open`
+    * (quote-aware), or -1 when it is unbalanced. */
+  private[graft] def matchParen(s: String, open: Int): Int = {
     var depth = 0; var inS = false; var i = open
     while (i < s.length) {
       val c = s(i)

@@ -291,23 +291,6 @@ object Dml {
       case _ => None
     }
 
-  /** index of the ')' matching the '(' at `open` (quote-aware). */
-  private def matchParenAt(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inS = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   private val insertHeadRe =
     """(?is)\A\s*INSERT\s+INTO\s+([\w."]+)\s*""".r
 
@@ -338,7 +321,7 @@ object Dml {
     // is not itself a query
     var colsOpt: Option[Seq[String]] = None
     if (rest.startsWith("(")) {
-      val close = matchParenAt(rest, 0)
+      val close = graft.SqlRewrites.matchParen(rest, 0)
       require(close > 0, "unbalanced ( in INSERT")
       val inner = rest.substring(1, close).trim
       val head = inner.split("[\\s(,]", 2)(0).toUpperCase
